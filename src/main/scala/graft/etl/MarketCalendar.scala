@@ -28,9 +28,4 @@ object MarketCalendar {
     * (utils.py:26-36). Upper bound exclusive (indicators.py:174-176). */
   def marketOpenCloseNanos(date: LocalDate): (Long, Long) =
     (epochNanos(date, OpenTime), epochNanos(date, CloseTime))
-
-  def marketOpenCloseMicros(date: LocalDate): (Long, Long) = {
-    val (o, c) = marketOpenCloseNanos(date)
-    (o / 1000L, c / 1000L)
-  }
 }

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   * buffers updated and three projections evaluated per row over the
   * same running frame. This class concatenates the three buffers
   * (shared row counter) and emits every output from a single
-  * evaluation, which is what the headline `pipeline_window` query and
-  * `runRange` want: one Window operator, one state update per row.
+  * evaluation, which is what [[graft.ind.IndicatorPipeline.tail]] (run,
+  * runRange and the pipeline_* queries) wants: one Window operator, one
+  * state update per row.
   *
   * State transitions are literally the three parents' update lists side
   * by side (same TA-Lib seed conventions, same arithmetic — see

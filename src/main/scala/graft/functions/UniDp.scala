@@ -8,8 +8,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernels for the SentencePiece-style unigram Viterbi DP of
-  * the tok_* queries — the fused forms of `dpExprS` / `dpScoreS` /
-  * `btExprS` in TokQueries (which remain the DuckDB oracle mirrors).
+  * the tok_* queries — the fused forms of the nested-fold SQL DP,
+  * scores-only DP and backtrack (kept in OpsSpec as the reference the
+  * kernels are pinned against; TokQueries' DuckDB oracles run the same
+  * recurrence as list_reduce folds).
   *
   * The HOF formulations rebuild the whole (2L+2)-cell DP array with an
   * interpreted `transform` on every one of the L outer fold steps —
@@ -56,7 +58,7 @@ object UniDp {
   private def sub(w: UTF8String, pos: Int, len: Int): UTF8String =
     w.substringSQL(pos, len)
 
-  /** [[dpScore]] + backpointers — dpExprS's 2L+2 cells. */
+  /** [[dpScore]] + backpointers — the full fold's 2L+2 cells. */
   def dp(w: UTF8String, lp: MapData): ArrayData = {
     val L = w.numChars()
     val s = new Array[Long](L + 1)
@@ -93,7 +95,7 @@ object UniDp {
     new GenericArrayData(out)
   }
 
-  /** Scores-only DP with piece `ban` excluded — dpScoreS's L+1 cells.
+  /** Scores-only DP with piece `ban` excluded — the scores fold's L+1 cells.
     * CAUTION (fold fidelity): s(e) is written BEFORE the next step
     * reads it, and the banned comparison uses the same substring. */
   def dpScore(w: UTF8String, lp: MapData, ban: UTF8String): ArrayData = {
@@ -122,7 +124,7 @@ object UniDp {
     new GenericArrayData(s)
   }
 
-  /** Backtrack — btExprS's string cells: cell 1 the cursor, then the
+  /** Backtrack — the backtrack fold's string cells: cell 1 the cursor, then the
     * '#' padding, path pieces APPENDED at the tail end-first (each
     * active fold step is concat([new cursor], acc[2..], [piece]) —
     * replace the head, append the piece, so the array grows by one per

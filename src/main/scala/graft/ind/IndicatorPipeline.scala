@@ -2,7 +2,8 @@ package graft.ind
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Densify, Interpolate, MarketCalendar, Sessionize}
@@ -16,14 +17,20 @@ import graft.model.{IndicatorConfig, Schemas}
   *   indicators → 18-column project → warm-up dropna.
   *
   * Replaces the reference's per-ticker Python loop
-  * (data_indicators.py:48-62) with Window/groupByKey partitioning: one
-  * hash exchange on `ticker` feeds sessionization; (ticker, island)
-  * feeds everything after.
+  * (data_indicators.py:48-62) with Window partitioning over the series
+  * keys: `ticker` for one day ([[run]]), `(ticker, ds)` for a range of
+  * days ([[runRange]]). One hash exchange on the series keys feeds
+  * sessionization; (series, island) feeds everything after, so the
+  * whole pipeline is ONE exchange.
   *
-  * Scale notes (100 TB): filters fold to literals and push into the
-  * parquet scan; every window shares the (ticker[, island]) exchange;
-  * the recursive scan streams per group (a ticker-day is ≤ ~420 rows,
-  * SURVEY.md §7.4). Nothing collects to the driver.
+  * [[run]] and [[runRange]] differ only in their market-hours front
+  * end; both call the same key-generic body, and the registry's
+  * pipeline_* queries call its public [[tail]] directly.
+  *
+  * Scale notes (100 TB): the per-day filter folds to literals and
+  * pushes into the parquet scan; every window shares the
+  * (series[, island]) exchange; a ticker-day is ≤ ~420 rows
+  * (SURVEY.md §7.4). Nothing collects to the driver.
   */
 object IndicatorPipeline {
 
@@ -33,144 +40,86 @@ object IndicatorPipeline {
   def run(raw: DataFrame, date: LocalDate,
       cfg: IndicatorConfig = IndicatorConfig()): DataFrame = {
     val (mst, met) = MarketCalendar.marketOpenCloseNanos(date)
-    val gapsNs = cfg.allowedGapsSec.map(_ * 1000000000L)
-    val stepNs = cfg.gridStepSec * 1000000000L
-
-    val filtered = raw
-      .filter(col(cfg.timeColumn).isNotNull)          // P5 analog for time
-      .filter(col("ticker").isNotNull)                 // P5 (data_indicators.py:49-50)
-      .filter(col(cfg.timeColumn) >= lit(mst) && col(cfg.timeColumn) < lit(met)) // P2
-      .withColumn(cfg.volumeColumn, col(cfg.volumeColumn).cast("double")) // P6
-
-    val sessioned = Sessionize(filtered, "ticker", cfg.timeColumn, gapsNs) // F1
-    val densified = Densify(sessioned,
-      Seq("ticker", "island", "sub_ticker"), cfg.timeColumn, stepNs)       // F2
-    val filled = Interpolate(densified, Seq("ticker", "island"),
-      cfg.timeColumn,
-      Seq(cfg.volumeColumn, "open", cfg.closeUnadjColumn, cfg.highColumn,
-        cfg.lowColumn, cfg.closeColumn))                                   // F3
-
-    // (ticker, island) ≡ sub_ticker: reuses Interpolate's exchange
-    val framed = FrameIndicators.addAll(filled,
-      Seq("ticker", "island"), Seq(cfg.timeColumn), price = cfg.closeColumn, cfg = cfg)
-
-    // R1-R4 recursive family. Default path: the fused graft_ind_w
-    // AggregateWindowFunction over the SAME (ticker, island) window the
-    // frame indicators ride — the whole pipeline is ONE hash exchange.
-    // Both the Wilder and ADX periods thread through the kernel; the
-    // flatMapGroups scan (cross-checked per round by ind_recursive vs
-    // ind_recursive_window) remains the fallback for the one config the
-    // shared-state kernel can't express (split rsi/cmo Wilder periods —
-    // which the scan path itself also rejects today).
-    val all =
-      if (cfg.rsiPeriod == cfg.cmoPeriod) {
-        graft.functions.GraftFunctions.register(raw.sparkSession)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("ticker", "island").orderBy(cfg.timeColumn)
-        framed
-          .withColumn("_x", expr(s"graft_ind_w(${cfg.closeColumn}, " +
-            s"${cfg.highColumn}, ${cfg.lowColumn}, ${cfg.closeUnadjColumn}, " +
-            s"${cfg.rsiPeriod}, ${cfg.adxPeriod})").over(w))
-          .withColumn("rsi", col("_x.rsi"))
-          .withColumn("cmo", col("_x.cmo"))
-          .withColumn("macd_hist", col("_x.macd_hist"))
-          .withColumn("adx", col("_x.adx"))
-          .withColumn("adx_hist", col("_x.adx_hist"))
-          .drop("_x")
-      } else RecursiveIndicators.addAll(framed,
-        Seq("sub_ticker"), Seq(cfg.timeColumn), price = cfg.closeColumn,
-        high = cfg.highColumn, low = cfg.lowColumn,
-        close = cfg.closeUnadjColumn, cfg = cfg)
-
-    val projected = all.select(
-      col(cfg.timeColumn).as("window_start"),
-      col(cfg.closeColumn).as("close_price"),
-      col("rocp_1"), col("rocp_2"), col("rocp_3"), col("rocp_4"), col("rocp_5"),
-      col("rsi"), col("mfi"), col("ultosc"), col("cmo"), col("aroonosc"),
-      col("macd_hist"), col("ppo"), col("sok"), col("sok_hist"),
-      col("adx"), col("adx_hist"),
-      col("sub_ticker").as("ticker"))                                     // P7
-
-    require(projected.columns.toSeq == Schemas.indicatorColumns)
-    if (cfg.skipNa) projected.na.drop() else projected                    // P4
+    val ts = col(cfg.timeColumn)
+    body(raw, ts >= lit(mst) && ts < lit(met), Seq("ticker"), cfg) // P2
   }
 
   /** Multi-day variant — the 100 TB shape: N trading days in ONE job.
     *
     * Replaces the reference's one-process-per-day Airflow fan-out
-    * (airflow_dag.py:26, max_active_runs=8) with a single plan: per-day
-    * market bounds are broadcast-joined (no per-day driver loop), series
-    * identity is (ticker, ds), and the recursive indicators run as the
-    * custom window aggregates so the whole range is ONE exchange on
+    * (airflow_dag.py:26, max_active_runs=8) with a single plan: each
+    * row's Eastern trading date `ds` looks its [open, close) bounds up
+    * in a literal date → bounds map (no join, no per-day driver loop;
+    * a day not in `dates` looks up null and drops), and series identity
+    * is (ticker, ds), so the whole range is ONE exchange on
     * hash(ticker, ds). Output carries `ds` for a date-partitioned sink
     * (partition pruning on read — BarsIO layout).
     */
   def runRange(raw: DataFrame, dates: Seq[LocalDate],
       cfg: IndicatorConfig = IndicatorConfig()): DataFrame = {
-    val spark = raw.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val gapsNs = cfg.allowedGapsSec.map(_ * 1000000000L)
-    val stepNs = cfg.gridStepSec * 1000000000L
+    val ts = col(cfg.timeColumn)
+    val byDate = typedLit(dates.map(d =>
+      d.toString -> MarketCalendar.marketOpenCloseNanos(d)).toMap)
+    val bounds = byDate(col("ds"))
+    val withDs = raw.withColumn("ds", date_format(from_utc_timestamp(
+      timestamp_seconds(ts / lit(1000000000d)),
+      MarketCalendar.Eastern.getId), "yyyy-MM-dd"))
+    body(withDs, ts >= bounds("_1") && ts < bounds("_2"), Seq("ticker", "ds"), cfg)
+  }
+
+  /** Filters → sessionize → densify → interpolate → [[tail]], every
+    * stage keyed by the `series` columns (which always include
+    * `ticker`, the sub-ticker label source). */
+  private def body(raw: DataFrame, marketHours: Column, series: Seq[String],
+      cfg: IndicatorConfig): DataFrame = {
     val ts = cfg.timeColumn
-
-    val bounds = spark.createDataFrame(
-      java.util.Arrays.asList(dates.map { d =>
-        val (o, c) = MarketCalendar.marketOpenCloseNanos(d)
-        org.apache.spark.sql.Row(d.toString, o, c)
-      }: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("ds",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_mst",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("_met",
-          org.apache.spark.sql.types.LongType))))
-
     val filtered = raw
-      .filter(col(ts).isNotNull && col("ticker").isNotNull)
-      .withColumn("ds", date_format(from_utc_timestamp(
-        timestamp_seconds(col(ts) / lit(1000000000d)),
-        MarketCalendar.Eastern.getId), "yyyy-MM-dd"))
-      .join(broadcast(bounds), Seq("ds"))              // prunes unrequested days
-      .filter(col(ts) >= col("_mst") && col(ts) < col("_met"))
-      .drop("_mst", "_met")
-      .withColumn(cfg.volumeColumn, col(cfg.volumeColumn).cast("double"))
+      .filter(col(ts).isNotNull)                       // P5 analog for time
+      .filter(col("ticker").isNotNull)                 // P5 (data_indicators.py:49-50)
+      .filter(marketHours)
+      .withColumn(cfg.volumeColumn, col(cfg.volumeColumn).cast("double")) // P6
 
-    val keys = Seq("ticker", "ds")
-    val sessioned = Sessionize(filtered, keys, "ticker", ts, gapsNs)
+    val sessioned = Sessionize(filtered, series, "ticker", ts,
+      cfg.allowedGapsSec.map(_ * 1000000000L))                             // F1
     val densified = Densify(sessioned,
-      keys ++ Seq("island", "sub_ticker"), ts, stepNs)
-    val filled = Interpolate(densified, keys :+ "island", ts,
+      series ++ Seq("island", "sub_ticker"), ts, cfg.gridStepSec * 1000000000L) // F2
+    val filled = Interpolate(densified, series :+ "island", ts,
       Seq(cfg.volumeColumn, "open", cfg.closeUnadjColumn, cfg.highColumn,
-        cfg.lowColumn, cfg.closeColumn))
-    val framed = FrameIndicators.addAll(filled,
-      keys :+ "island", Seq(ts), price = cfg.closeColumn, cfg = cfg)
+        cfg.lowColumn, cfg.closeColumn))                                   // F3
+    tail(filled, series, cfg)
+  }
 
-    // The fused kernel threads both the Wilder and ADX periods
-    // (MACDFIX stays fixed-constant by definition). The one config it
-    // can't express — split rsi/cmo Wilder periods, which share one
-    // state — is rejected loudly, exactly as the scan path rejects it.
+  /** Indicator tail over sessionized, gap-free bars (columns: `series`
+    * keys, `island`, `sub_ticker` and the `cfg` source columns): frame
+    * indicators plus the fused recursive kernel over ONE
+    * (series, island) window — the exchange the caller's Interpolate
+    * already made — then the 18 [[Schemas.indicatorColumns]] (plus any
+    * non-`ticker` series key) and, when `cfg.skipNa`, the warm-up
+    * dropna (P4).
+    *
+    * The kernel's RSI and CMO share one Wilder state, so split periods
+    * are rejected here, at call time.
+    */
+  def tail(df: DataFrame, series: Seq[String], cfg: IndicatorConfig): DataFrame = {
     require(cfg.rsiPeriod == cfg.cmoPeriod,
-      "runRange's shared Wilder kernel needs rsiPeriod == cmoPeriod")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("ticker", "ds", "island").orderBy(ts)
-    val p = col(cfg.closeColumn)
-    val projected = framed
-      .withColumn("_x", expr(s"graft_ind_w(${cfg.closeColumn}, " +
-        s"${cfg.highColumn}, ${cfg.lowColumn}, ${cfg.closeUnadjColumn}, " +
-        s"${cfg.rsiPeriod}, ${cfg.adxPeriod})").over(w))
-      .select(
-        col(ts).as("window_start"), p.as("close_price"),
-        col("rocp_1"), col("rocp_2"), col("rocp_3"), col("rocp_4"), col("rocp_5"),
-        col("_x.rsi").as("rsi"),
-        col("mfi"), col("ultosc"),
-        col("_x.cmo").as("cmo"),
-        col("aroonosc"),
-        col("_x.macd_hist").as("macd_hist"),
-        col("ppo"), col("sok"), col("sok_hist"),
-        col("_x.adx").as("adx"),
-        col("_x.adx_hist").as("adx_hist"),
-        col("sub_ticker").as("ticker"), col("ds"))
-    if (cfg.skipNa) projected.na.drop() else projected
+      "RSI/CMO share one Wilder state; rsiPeriod must equal cmoPeriod")
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val ts = cfg.timeColumn
+    val part = series :+ "island"
+    val framed = FrameIndicators.addAll(df, part, Seq(ts),
+      price = cfg.closeColumn, cfg = cfg)
+    val x = expr(s"graft_ind_w(${cfg.closeColumn}, ${cfg.highColumn}, " +
+      s"${cfg.lowColumn}, ${cfg.closeUnadjColumn}, ${cfg.rsiPeriod}, " +
+      s"${cfg.adxPeriod})").over(Window.partitionBy(part.map(col): _*).orderBy(ts))
+    val projected = framed.withColumn("_x", x).select(
+      Schemas.indicatorColumns.map {
+        case "window_start" => col(ts).as("window_start")
+        case "close_price"  => col(cfg.closeColumn).as("close_price")
+        case "ticker"       => col("sub_ticker").as("ticker")          // P7
+        case c if RecursiveIndicators.outputColumns.contains(c) =>
+          col(s"_x.$c").as(c)
+        case c              => col(c)
+      } ++ series.filterNot(_ == "ticker").map(col): _*)
+    if (cfg.skipNa) projected.na.drop() else projected                    // P4
   }
 }

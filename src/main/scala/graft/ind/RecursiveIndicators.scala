@@ -21,6 +21,12 @@ import graft.model.IndicatorConfig
   * day so group size stays bounded (≤ ~420 rows — SURVEY.md §7.4) and
   * the iterator is materialized per group only.
   *
+  * The production pipeline does not run this scan: it computes the same
+  * five outputs with the fused [[graft.functions.IndicatorPackWindow]]
+  * window kernel ([[IndicatorPipeline.tail]]). The scan is the
+  * reference-faithful cross-check (the oracle-gated `ind_recursive`
+  * query) the kernel is pinned against.
+  *
   * Scaling matches the reference: rsi/cmo/adx/adx_hist are emitted /100
   * (as fractions), macd_hist /10 (indicators.py:332,411,443,485-487;
   * tuple-swap quirk at :294-297 means adx_hist = (+DI − −DI)/100).

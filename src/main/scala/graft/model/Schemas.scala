@@ -44,19 +44,6 @@ object Schemas {
     })
 }
 
-/** One raw OHLCV bar. Used by the typed recursive-kernel path
-  * (Dataset[Bar].groupByKey.flatMapGroups, SURVEY.md §2 group W-R).
-  */
-final case class Bar(
-    ticker: String,
-    volume: Double,
-    open: Double,
-    close: Double,
-    high: Double,
-    low: Double,
-    adjClose: Double,
-    windowStart: Long)
-
 /** Engine-side equivalent of the reference's pydantic config
   * (indicators.py:97-143). Defaults replicate the only values the
   * reference ever uses (data_indicators.py:53-57).
@@ -81,7 +68,6 @@ final case class IndicatorConfig(
     stochFastD: Int = 3,
     ppoFast: Int = 12,
     ppoSlow: Int = 26,
-    scale: Boolean = true,                   // /100 (macd_hist /10) — indicators.py:134
     skipNa: Boolean = true,                  // dropna — indicators.py:135
     /** Consecutive-bar gaps (seconds) that do NOT split an island
       * (indicators.py:184: diff ∈ {60,120,180}). */

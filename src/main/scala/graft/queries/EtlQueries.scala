@@ -2,9 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.etl.{Densify, Interpolate, Sessionize}
-import graft.ind.{FrameIndicators, RecursiveIndicators}
+import graft.ind.{FrameIndicators, IndicatorPipeline, RecursiveIndicators}
+import graft.model.IndicatorConfig
 
 /** F1/F2/F3 restructuring-chain queries (SURVEY.md §2) over the
   * deterministic minute-grid bars derived from `events`
@@ -43,6 +45,20 @@ object EtlQueries {
 
   private def r6(c: String) = Rounding.r6(col(c)).as(c)
 
+  /** [[IndicatorPipeline.tail]] over the µs-domain minute bars, whose
+    * one close series serves as both price and unadjusted close. */
+  private val TailCfg = IndicatorConfig(timeColumn = "ws", closeColumn = "close")
+
+  /** r6 on every double column (the oracles' `round(x, 6) + 0.0`). */
+  private def rounded(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.map(f =>
+      if (f.dataType == DoubleType) r6(f.name) else col(f.name)): _*)
+
+  /** Dropping warm-up rows before r6 keeps the same rows as after:
+    * r6 never turns a finite value into null or NaN. */
+  private val pipelineFull: (SparkSession, String) => DataFrame = (s, dir) =>
+    rounded(IndicatorPipeline.tail(interpolated(s, dir), Seq("ticker"), TailCfg))
+
   /** Synthetic "trading day" length (grid slots) for pipeline_range —
     * short enough that the gate SFs genuinely span several days
     * (sf0.01 ≈ 100 slots/ticker → 2-3 days; sf0.1 → ~6). */
@@ -76,78 +92,28 @@ object EtlQueries {
       out.na.drop()
     }),
 
-    // Fully in-engine flagship: every indicator (frame AND recursive)
-    // as Window expressions over ONE exchange — the recursive family via
-    // the custom AggregateWindowFunctions. Same oracle as pipeline_full.
-    "pipeline_window" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
-      val fi = FrameIndicators.addAll(interpolated(s, dir),
-        Seq("ticker", "island"), Seq("ws"))
-      val w = Window.partitionBy("ticker", "island").orderBy("ws")
-      // ONE fused state machine for all five recursive outputs — a
-      // single window-aggregate buffer instead of three.
-      fi.withColumn("_x",
-          expr("graft_ind_w(close, high, low, close)").over(w))
-        .select(col("ws").as("window_start"),
-          Rounding.r6(col("close")).as("close_price"),
-          r6("rocp_1"), r6("rocp_2"), r6("rocp_3"), r6("rocp_4"), r6("rocp_5"),
-          Rounding.r6(col("_x.rsi")).as("rsi"),
-          r6("mfi"), r6("ultosc"),
-          Rounding.r6(col("_x.cmo")).as("cmo"),
-          r6("aroonosc"),
-          Rounding.r6(col("_x.macd_hist")).as("macd_hist"),
-          r6("ppo"), r6("sok"), r6("sok_hist"),
-          Rounding.r6(col("_x.adx")).as("adx"),
-          Rounding.r6(col("_x.adx_hist")).as("adx_hist"),
-          col("sub_ticker").as("ticker"))
-        .na.drop()
-    }),
+    // The older registry name of pipeline_full: same function, same oracle.
+    "pipeline_window" -> pipelineFull,
 
     // Faithful E2 (SURVEY.md §3): the reference's full 18-column
-    // indicator table. The recursive family rides the fused
-    // graft_ind_w AggregateWindowFunction on the SAME (ticker, island)
-    // window as the frame indicators — the flagship is ONE hash
-    // exchange end-to-end (IndicatorPipeline.run's default path). The
-    // flatMapGroups scan remains oracle-gated as ind_recursive; its
-    // parity with the window kernels is pinned by ind_recursive vs
-    // ind_recursive_window sharing per-value hashes.
-    "pipeline_full" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
-      val fi = FrameIndicators.addAll(interpolated(s, dir),
-        Seq("ticker", "island"), Seq("ws"))
-      val w = Window.partitionBy("ticker", "island").orderBy("ws")
-      fi.withColumn("_x",
-          expr("graft_ind_w(close, high, low, close)").over(w))
-        .select(col("ws").as("window_start"),
-          Rounding.r6(col("close")).as("close_price"),
-          r6("rocp_1"), r6("rocp_2"), r6("rocp_3"), r6("rocp_4"), r6("rocp_5"),
-          Rounding.r6(col("_x.rsi")).as("rsi"),
-          r6("mfi"), r6("ultosc"),
-          Rounding.r6(col("_x.cmo")).as("cmo"),
-          r6("aroonosc"),
-          Rounding.r6(col("_x.macd_hist")).as("macd_hist"),
-          r6("ppo"), r6("sok"), r6("sok_hist"),
-          Rounding.r6(col("_x.adx")).as("adx"),
-          Rounding.r6(col("_x.adx_hist")).as("adx_hist"),
-          col("sub_ticker").as("ticker"))
-        .na.drop()
-    }),
+    // indicator table — IndicatorPipeline's own tail over the
+    // interpolated bars, so the flagship is ONE hash exchange
+    // end-to-end. The flatMapGroups scan remains oracle-gated as
+    // ind_recursive; its parity with the window kernels is pinned by
+    // ind_recursive vs ind_recursive_window sharing per-value hashes.
+    "pipeline_full" -> pipelineFull,
 
     // IndicatorPipeline.runRange's 100 TB multi-day shape, oracle-gated:
     // N "trading days" in ONE plan — series identity (ticker, ds), every
-    // stage (sessionize → densify → interpolate → frame + fused
-    // recursive kernel) keyed by (ticker, ds[, island]) so the whole
-    // range rides one hash exchange (PlanSpec pin). Days here slice the
-    // synthetic grid every RangeDaySlots slots (pure integer epoch
-    // math; the calendar-bound variant is test-pinned by PipelineSpec's
-    // runRange ≡ per-day-union). Warm-up rows stay (P4's dropna is
-    // pipeline_full's pin; days are short, and the shape under test is
-    // the multi-day partitioning, not the trim).
+    // stage (sessionize → densify → interpolate → indicator tail) keyed
+    // by (ticker, ds[, island]) so the whole range rides one hash
+    // exchange (PlanSpec pin). Days here slice the synthetic grid every
+    // RangeDaySlots slots (pure integer epoch math; the calendar-bound
+    // variant is test-pinned by PipelineSpec's runRange ≡ per-day-union).
+    // Warm-up rows stay (P4's dropna is pipeline_full's pin; days are
+    // short, and the shape under test is the multi-day partitioning,
+    // not the trim).
     "pipeline_range" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       val mb = EventBars.minuteBars(s, dir)
         .withColumn("ds", expr(s"(ws - ${EventBars.GridBaseMicros}L) DIV " +
           s"${Step * RangeDaySlots}L"))
@@ -156,22 +122,7 @@ object EtlQueries {
       val dz = Densify(sz.drop("event_id"),
         keys ++ Seq("island", "sub_ticker"), "ws", Step)
       val ip = Interpolate(dz, keys :+ "island", "ws", FillCols)
-      val fi = FrameIndicators.addAll(ip, keys :+ "island", Seq("ws"))
-      val w = Window.partitionBy("ticker", "ds", "island").orderBy("ws")
-      fi.withColumn("_x",
-          expr("graft_ind_w(close, high, low, close)").over(w))
-        .select(col("ws").as("window_start"),
-          Rounding.r6(col("close")).as("close_price"),
-          r6("rocp_1"), r6("rocp_2"), r6("rocp_3"), r6("rocp_4"), r6("rocp_5"),
-          Rounding.r6(col("_x.rsi")).as("rsi"),
-          r6("mfi"), r6("ultosc"),
-          Rounding.r6(col("_x.cmo")).as("cmo"),
-          r6("aroonosc"),
-          Rounding.r6(col("_x.macd_hist")).as("macd_hist"),
-          r6("ppo"), r6("sok"), r6("sok_hist"),
-          Rounding.r6(col("_x.adx")).as("adx"),
-          Rounding.r6(col("_x.adx_hist")).as("adx_hist"),
-          col("sub_ticker").as("ticker"), col("ds"))
+      rounded(IndicatorPipeline.tail(ip, keys, TailCfg.copy(skipNa = false)))
     }))
 
   val oracles: Map[String, String] = Map(

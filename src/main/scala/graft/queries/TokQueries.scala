@@ -39,102 +39,16 @@ object TokQueries {
   private val pairsD =
     "list_transform(generate_series(1, length(tok) - 1), i -> substr(tok, i, 2))"
 
-  private val NEG = "-1000000000000000L"
-
-  /** Best Viterbi score into position e (folded over split points j2)
-    * against the piece→log-prob map in column `lpCol`; `ban` optionally
-    * names a column holding a piece excluded from the vocabulary (the
-    * loss-if-removed DP). */
-  private def innerMaxS(lpCol: String, ban: Option[String]): String = {
-    val banC = ban.fold("")(b => s"AND substring(w, j2 + 1, e - j2) <> $b ")
-    s"aggregate(transform(sequence(greatest(0, e - 4), e - 1), j2 -> " +
-      s"CASE WHEN element_at($lpCol, substring(w, j2 + 1, e - j2)) IS NOT " +
-      s"NULL $banC" +
-      s"AND element_at(acc, j2 + 1) > -100000000000000L THEN " +
-      s"element_at(acc, j2 + 1) " +
-      s"+ element_at($lpCol, substring(w, j2 + 1, e - j2)) " +
-      s"ELSE $NEG END), $NEG, (m2, x2) -> greatest(m2, x2))"
-  }
-
-  /** Scores-only Viterbi DP over word column `w` (cells 1..L+1, cell
-    * L+1 = the word's total best score) — the banned-piece rescoring
-    * pass needs no backpointers, so it folds half the state of
-    * [[dpExprS]]. */
-  private def dpScoreS(lpCol: String, ban: Option[String]): String =
-    "aggregate(sequence(1, length(w)), " +
-      s"concat(array(0L), transform(sequence(1, length(w)), z -> $NEG)), " +
-      "(acc, e) -> transform(sequence(1, length(w) + 1), q2 -> " +
-      s"IF(q2 - 1 <> e, element_at(acc, q2), ${innerMaxS(lpCol, ban)})))"
-
-  /** Full Viterbi DP: scores at cells 1..L+1, backpointers at cells
-    * L+2..2L+2 (ties take the smaller split point = longer piece). */
-  private def dpExprS(lpCol: String): String = {
-    val innerMax = innerMaxS(lpCol, None)
-    "aggregate(sequence(1, length(w)), " +
-      s"concat(array(0L), transform(sequence(1, length(w)), " +
-      s"z -> $NEG), transform(sequence(0, length(w)), z -> 0L)), " +
-      "(acc, e) -> transform(sequence(1, 2 * (length(w) + 1)), q2 -> " +
-      "CASE WHEN q2 - 1 <> e AND q2 <> length(w) + 2 + e " +
-      "THEN element_at(acc, q2) " +
-      s"WHEN q2 - 1 = e THEN $innerMax " +
-      "ELSE aggregate(transform(sequence(greatest(0, e - 4), e - 1), " +
-      s"j -> CASE WHEN element_at($lpCol, substring(w, j + 1, e - j)) IS " +
-      "NOT NULL AND element_at(acc, j + 1) > -100000000000000L AND " +
-      "element_at(acc, j + 1) " +
-      s"+ element_at($lpCol, substring(w, j + 1, e - j)) " +
-      s"= $innerMax THEN CAST(j AS BIGINT) ELSE 1000000000000000L " +
-      "END), 1000000000000000L, (m3, x3) -> least(m3, x3)) END))"
-  }
-
-  /** Backtrack fold over a `dpv` produced by [[dpExprS]]: emits the
-    * path pieces at cells 2.. (cell 1 carries the cursor). */
-  private val btExprS =
-    "aggregate(sequence(1, length(w)), " +
-      "concat(array(CAST(length(w) AS STRING)), " +
-      "transform(sequence(1, length(w)), z -> '#')), " +
-      "(acc, e) -> IF(CAST(element_at(acc, 1) AS INT) = 0, acc, " +
-      "concat(array(CAST(CAST(element_at(dpv, CAST(length(w) + 2 " +
-      "+ CAST(element_at(acc, 1) AS INT) AS INT)) AS INT) AS STRING)), " +
-      "slice(acc, 2, size(acc) - 1), " +
-      "array(substring(w, CAST(element_at(dpv, CAST(length(w) + 2 " +
-      "+ CAST(element_at(acc, 1) AS INT) AS INT)) AS INT) + 1, " +
-      "CAST(element_at(acc, 1) AS INT) " +
-      "- CAST(element_at(dpv, CAST(length(w) + 2 " +
-      "+ CAST(element_at(acc, 1) AS INT) AS INT)) AS INT))))))"
-
   /** Multi-char vocabulary slots that survive the prune (plus every
     * single char, which SentencePiece never drops). */
   private val KeepMulti = 20
 
-  /** The Viterbi DP / backtrack / banned-rescore expressions — the
-    * native [[graft.functions.UniDp]] kernels by default (identical
-    * integer recurrence as plain JVM loops; OpsSpec pins kernel ==
-    * fold cell for cell), `graft.unidp.fused=false` switches back to
-    * the interpreted nested-fold forms (which remain the DuckDB
-    * oracle mirrors). */
-  private def dpE(s: SparkSession): String =
-    if (s.conf.get("graft.unidp.fused", "true") == "true")
-      "graft_uni_dp(w, lp)"
-    else dpExprS("lp")
-  private def btE(s: SparkSession): String =
-    if (s.conf.get("graft.unidp.fused", "true") == "true")
-      "graft_uni_bt(w, dpv)"
-    else btExprS
-  private def sBanE(s: SparkSession): String =
-    if (s.conf.get("graft.unidp.fused", "true") == "true")
-      "element_at(graft_uni_dp_score(w, lp, bp), length(w) + 1)"
-    else s"element_at(${dpScoreS("lp", Some("bp"))}, length(w) + 1)"
-
-  /** The raw (un-checkpointed) round-1 DP + backtrack projection —
-    * receipt surface for UniDpPlanDrive only (the production queries
-    * checkpoint the DP, hiding it from their own plan dumps). */
-  private[graft] def rawUniDpForPlan(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val (wc, vocLp) = unigramRound1(s, dir)
-    wc.crossJoin(broadcast(lpMapOf(vocLp)))
-      .withColumn("dpv", expr(dpE(s)))
-      .withColumn("bt", expr(btE(s)))
-  }
+  /** The unigram Viterbi DP, backtrack and banned-piece rescore as
+    * the native [[graft.functions.UniDp]] kernels (OpsSpec pins each
+    * kernel == its nested-fold SQL form cell for cell). */
+  private val dpE = "graft_uni_dp(w, lp)"
+  private val btE = "graft_uni_bt(w, dpv)"
+  private val sBanE = "element_at(graft_uni_dp_score(w, lp, bp), length(w) + 1)"
 
   /** Round-1 shared prep: (wc(w, n), vocLp(piece, lp)) — the word-
     * frequency table and the initial micro-quantized piece log-probs
@@ -190,9 +104,9 @@ object TokQueries {
     val (wc, vocLp1) = unigramRound1(s, dir)
     val lpMap1 = lpMapOf(vocLp1)
     val dp1 = wc.crossJoin(broadcast(lpMap1))
-      .withColumn("dpv", expr(dpE(s)))
+      .withColumn("dpv", expr(dpE))
       .localCheckpoint()
-    val bt1 = dp1.withColumn("bt", expr(btE(s))).localCheckpoint()
+    val bt1 = dp1.withColumn("bt", expr(btE)).localCheckpoint()
     val counts1 = bt1
       .select(col("n"), explode(expr("slice(bt, 2, size(bt) - 1)"))
         .as("piece"))
@@ -206,7 +120,7 @@ object TokQueries {
       explode(expr("array_distinct(filter(slice(bt, 2, size(bt) - 1), " +
         "p -> length(p) >= 2))")).as("bp"))
     val banned = cand.crossJoin(broadcast(lpMap1))
-      .withColumn("s_ban", expr(sBanE(s)))
+      .withColumn("s_ban", expr(sBanE))
       .groupBy(col("bp").as("piece"))
       .agg(sum(col("n") * (col("s_full") - col("s_ban"))).as("loss_rm"))
     val pruneAll = vocLp1.filter(length(col("piece")) >= 2)
@@ -233,8 +147,8 @@ object TokQueries {
         "/ CAST(tc AS DOUBLE)) * 1000000.0) AS BIGINT)").as("lp"))
       .localCheckpoint()
     val dp2 = wc.crossJoin(broadcast(lpMapOf(vocLp2)))
-      .withColumn("dpv", expr(dpE(s)))
-      .withColumn("bt", expr(btE(s)))
+      .withColumn("dpv", expr(dpE))
+      .withColumn("bt", expr(btE))
     (vocLp1, counts1, pruneTab, vocLp2, dp2)
   }
 
@@ -366,10 +280,10 @@ object TokQueries {
     // (length 2–4) by corpus frequency; initial piece log-probs
     // ln(f/Σf) micro-quantized to BIGINT; the E-step Viterbi-segments
     // every DISTINCT word (the word-frequency reduction again) by an
-    // integer-score DP run as a nested sequential fold (scores AND
-    // backpointers ride one ARRAY<BIGINT> accumulator; ties take the
+    // integer-score DP (the graft_uni_dp kernel; scores AND
+    // backpointers ride one ARRAY<BIGINT>; ties take the
     // smaller split point = longer piece, an integer compare on both
-    // engines); a second bounded fold backtracks the path; the M-step
+    // engines); graft_uni_bt backtracks the path; the M-step
     // re-counts pieces weighted by word count. Emits the top-20
     // re-estimated pieces. Scale: the corpus collapses to the word-
     // frequency table once; the vocab map is a ≤ ~80-entry broadcast;
@@ -378,8 +292,8 @@ object TokQueries {
       val (wc, vocLp) = unigramRound1(s, dir)
       graft.functions.GraftFunctions.register(s)
       val dp = wc.crossJoin(broadcast(lpMapOf(vocLp)))
-        .withColumn("dpv", expr(dpE(s)))
-      val bt = dp.withColumn("bt", expr(btE(s)))
+        .withColumn("dpv", expr(dpE))
+      val bt = dp.withColumn("bt", expr(btE))
       val counts = bt
         .select(col("n"), explode(expr("slice(bt, 2, size(bt) - 1)"))
           .as("piece"))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import graft.etl.{MarketCalendar, Validate}
 import graft.ind.IndicatorPipeline
 import graft.io.BarsIO
-import graft.model.Schemas
+import graft.model.{IndicatorConfig, Schemas}
 
 /** E2-faithful pipeline over raw ns-domain bars (SURVEY.md §5.4):
   * market-hours boundaries, island trim, warm-up dropna, output schema;
@@ -99,22 +99,51 @@ class PipelineSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters"), "day filter must prune partitions")
   }
 
+  /** One day's bars for `t`: 40 on-grid minutes from exactly the open,
+    * a 2-row island ending at close − 1 ns, and a row at exactly close
+    * one minute after a lone bar (a 2-row island only if close leaked). */
+  private def boundaryDay(t: String, d: LocalDate): Seq[Row] = {
+    val (o, c) = MarketCalendar.marketOpenCloseNanos(d)
+    (0 until 40).map(i => bar(t, o + i * minNs, 60.0 + i % 7 + i * 0.1)) ++
+      Seq(bar(t, c - minNs - 1, 70.0), bar(t, c - 1, 71.0),
+        bar(t + "_EDGE", c - minNs, 72.0), bar(t + "_EDGE", c, 73.0))
+  }
+
   test("runRange over N days == union of per-day runs") {
     val day2 = date.plusDays(1)
     val open2 = MarketCalendar.marketOpenCloseNanos(day2)._1
     val d2Rows = (0 until 38).map(i => bar("MSFT", open2 + i * minNs, 50.0 + i * 0.5))
-    val both = spark.createDataFrame(
-      java.util.Arrays.asList((rawRows() ++ d2Rows): _*), Schemas.rawBars)
-    val ranged = IndicatorPipeline.runRange(both, Seq(date, day2))
-      .drop("ds").collect().map(_.toString).sorted
-    val d1 = spark.createDataFrame(
-      java.util.Arrays.asList(rawRows(): _*), Schemas.rawBars)
-    val d2 = spark.createDataFrame(
-      java.util.Arrays.asList(d2Rows: _*), Schemas.rawBars)
-    val perDay = (IndicatorPipeline.run(d1, date).collect() ++
-      IndicatorPipeline.run(d2, day2).collect()).map(_.toString).sorted
-    assert(ranged.toSeq == perDay.toSeq)
-    assert(ranged.nonEmpty)
+    // Friday EST → Monday EDT across the 2024-03-10 switch; the Sunday
+    // rows sit on a day runRange is not asked for and must drop.
+    val fri = LocalDate.of(2024, 3, 8)
+    val sun = LocalDate.of(2024, 3, 10)
+    val mon = LocalDate.of(2024, 3, 11)
+    val dst = boundaryDay("IBM", fri) ++ boundaryDay("IBM", mon) ++
+      boundaryDay("IBM", sun)
+    val inputs = Seq(Seq(date, day2) -> (rawRows() ++ d2Rows), Seq(fri, mon) -> dst)
+    for ((dates, rows) <- inputs;
+         cfg <- Seq(IndicatorConfig(), IndicatorConfig(skipNa = false))) {
+      val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*), Schemas.rawBars)
+      val ranged = IndicatorPipeline.runRange(raw, dates, cfg).collect()
+      assert(ranged.map(_.getString(19)).toSet == dates.map(_.toString).toSet)
+      val got = ranged.map(r => Row(r.toSeq.init: _*).toString).sorted
+      val perDay = dates.flatMap(d => IndicatorPipeline.run(raw, d, cfg).collect())
+        .map(_.toString).sorted
+      assert(got.toSeq == perDay, s"$dates skipNa=${cfg.skipNa}")
+    }
+    val dstRaw = spark.createDataFrame(java.util.Arrays.asList(dst: _*), Schemas.rawBars)
+    val ws = IndicatorPipeline.runRange(dstRaw, Seq(fri, mon), IndicatorConfig(skipNa = false))
+      .collect().map(_.getLong(0)).toSet
+    Seq(fri, mon).foreach { d =>
+      val (o, c) = MarketCalendar.marketOpenCloseNanos(d)
+      assert(ws(o) && ws(c - 1) && !ws(c), d)
+    }
+  }
+
+  test("split RSI/CMO periods are rejected when the plan is built") {
+    intercept[IllegalArgumentException] {
+      IndicatorPipeline.run(rawDay(), date, IndicatorConfig(rsiPeriod = 14, cmoPeriod = 9))
+    }
   }
 
   test("fused window kernel ≡ scan at non-default periods (wilder=7, adx=10)") {

@@ -84,6 +84,22 @@ class PlanSpec extends SparkSpec {
     assert(shuffles(plan("pipeline_range")) == 1)
   }
 
+  test("runRange: one hash exchange, no broadcast of per-day bounds") {
+    // Each row looks its day's market bounds up in a literal map, so
+    // the range needs no join: the (ticker, ds) exchange is the only one.
+    import org.apache.spark.sql.Row
+    val d = java.time.LocalDate.of(2024, 3, 5)
+    val o = graft.etl.MarketCalendar.marketOpenCloseNanos(d)._1
+    val rows = (0 until 5).map(i =>
+      Row("AAPL", 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, o + i * 60000000000L))
+    val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      graft.model.Schemas.rawBars)
+    val p = graft.ind.IndicatorPipeline.runRange(raw, Seq(d, d.plusDays(1)))
+      .queryExecution.executedPlan.toString
+    assert(shuffles(p) == 1, p)
+    assert(!p.contains("BroadcastExchange"), p)
+  }
+
   test("pipeline_full runs end-to-end on ONE hash exchange") {
     // the recursive family rides the fused AggregateWindowFunction on
     // the same (ticker, island) window as the frame indicators — the
