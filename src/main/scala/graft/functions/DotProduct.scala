@@ -144,16 +144,15 @@ object GraftFunctions {
   import org.apache.spark.sql.catalyst.expressions.Literal
   import org.apache.spark.sql.types.IntegerType
 
-  private[functions] def litIntParam(e: Expression, fn: String): Int = e match {
+  private def litInt(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
       s"$fn expects a literal INT parameter, got $other")
   }
-  private def litInt(e: Expression, fn: String): Int = litIntParam(e, fn)
 
   /** Fail on unexpected arity instead of silently dropping arguments —
-    * a caller passing a period to a fixed-kernel function (MACDFIX/ADX
-    * are fixed-constant by definition) must hear about it at analysis
+    * a caller passing a period to a fixed-constant kernel (graft_ind_w's
+    * MACDFIX is fixed by definition) must hear about it at analysis
     * time, not get default behavior.
     */
   private def arity(name: String, ns: Int*)(
@@ -163,10 +162,6 @@ object GraftFunctions {
         s"$name expects ${ns.mkString(" or ")} argument(s), got ${cs.length}")
       b(cs)
     }
-
-  /** Wilder-family period: optional trailing literal INT, default 14. */
-  private def wilderPeriod(cs: Seq[Expression], name: String): Int =
-    if (cs.length > 1) litIntParam(cs(1), name) else 14
 
   /** The single catalog of every graft function: name, implementing
     * class, and arity-checked builder. Consumed by BOTH registration
@@ -199,29 +194,9 @@ object GraftFunctions {
     ("graft_hplane_sig", classOf[HyperplaneSig],
       arity("graft_hplane_sig", 2)(cs =>
         HyperplaneSig(cs(0), litInt(cs(1), "graft_hplane_sig")))),
-    ("graft_rsi_w", classOf[RsiWindow],
-      arity("graft_rsi_w", 1, 2)(cs =>
-        RsiWindow(cs(0), wilderPeriod(cs, "graft_rsi_w")))),
-    ("graft_cmo_w", classOf[CmoWindow],
-      arity("graft_cmo_w", 1, 2)(cs =>
-        CmoWindow(cs(0), wilderPeriod(cs, "graft_cmo_w")))),
-    ("graft_macd_hist_w", classOf[MacdHistWindow],
-      arity("graft_macd_hist_w", 1)(cs => MacdHistWindow(cs(0)))),
-    ("graft_adx_w", classOf[AdxWindow],
-      arity("graft_adx_w", 3, 4)(cs => AdxWindow(cs(0), cs(1), cs(2),
-        if (cs.length > 3) litInt(cs(3), "graft_adx_w") else 14))),
-    ("graft_adx_hist_w", classOf[AdxHistWindow],
-      arity("graft_adx_hist_w", 3, 4)(cs => AdxHistWindow(cs(0), cs(1), cs(2),
-        if (cs.length > 3) litInt(cs(3), "graft_adx_hist_w") else 14))),
     ("graft_atr_w", classOf[AtrWindow],
       arity("graft_atr_w", 3, 4)(cs => AtrWindow(cs(0), cs(1), cs(2),
         if (cs.length > 3) litInt(cs(3), "graft_atr_w") else 14))),
-    ("graft_wilder_w", classOf[WilderPairWindow],
-      arity("graft_wilder_w", 1, 2)(cs =>
-        WilderPairWindow(cs(0), wilderPeriod(cs, "graft_wilder_w")))),
-    ("graft_adx_pair_w", classOf[AdxPairWindow],
-      arity("graft_adx_pair_w", 3, 4)(cs => AdxPairWindow(cs(0), cs(1), cs(2),
-        if (cs.length > 3) litInt(cs(3), "graft_adx_pair_w") else 14))),
     ("graft_absdev_sum", classOf[AbsDevSum],
       arity("graft_absdev_sum", 2)(cs => AbsDevSum(cs(0), cs(1)))),
     ("graft_simhash", classOf[SimHash],

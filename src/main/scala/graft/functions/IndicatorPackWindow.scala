@@ -3,26 +3,40 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
-/** ALL FIVE recursive indicators from ONE window state machine:
+/** The recursive indicator family — RSI, CMO, MACDFIX histogram and
+  * ADX/±DI (TA-Lib 0.4.32; reference stockdata/indicators.py:324-487) —
+  * as ONE custom `AggregateWindowFunction`:
   * struct(rsi, cmo, macd_hist, adx, adx_hist).
   *
-  * [[WilderPairWindow]], [[MacdHistWindow]] and [[AdxPairWindow]] are
-  * each a separate `AggregateWindowFunction`, so a query using all
-  * three runs three state machines through the WindowExec — three
-  * buffers updated and three projections evaluated per row over the
-  * same running frame. This class concatenates the three buffers
-  * (shared row counter) and emits every output from a single
-  * evaluation, which is what [[graft.ind.IndicatorPipeline.tail]] (run,
-  * runRange and the pipeline_* queries) wants: one Window operator, one
-  * state update per row.
+  * Every output depends on the whole series prefix, so the state is a
+  * declarative aggregate buffer over the running
+  * `UnboundedPreceding → CurrentRow` frame (like `row_number`): the
+  * family runs inside the Window operator on the caller's series
+  * exchange, with no `groupByKey` hop and no object (de)serialization.
+  * The buffer holds three state machines behind one shared row
+  * counter, and one evaluation per row emits all five outputs. This is
+  * the only Spark implementation of the family:
+  * [[graft.ind.IndicatorPipeline.tail]] (run, runRange, pipeline_*)
+  * and the ind_recursive, ind_stochrsi and ind_adxr queries all call it
+  * as `graft_ind_w`.
   *
-  * State transitions are literally the three parents' update lists side
-  * by side (same TA-Lib seed conventions, same arithmetic — see
-  * [[graft.ind.RecursiveIndicators.scan]], reference
-  * stockdata/indicators.py:404-487), so outputs are bit-identical to
-  * the unfused functions and the DuckDB oracle. The Wilder and ADX
-  * periods thread through (every row threshold derives from them);
-  * MACDFIX is fixed-constant by definition (TA-Lib's fixed 12/26/9 k).
+  * Update expressions follow [[graft.ind.RecursiveIndicators.scan]]
+  * (the pure-Scala reference) and its DuckDB mirror
+  * [[graft.ind.RecursiveIndicators.sqlStages]]:
+  *  - Wilder (RSI/CMO): SMA of the first `period` gains/losses at row
+  *    period+1, then `(prev·(p−1) + x)/p`; a zero denominator emits 0.
+  *  - MACDFIX: TA-Lib's fixed 12/26/9 k (0.15/0.075/0.2), EMAs seeded
+  *    at row 26, signal at row 34. One deliberate arithmetic
+  *    difference: the fast EMA seed is (Σ₂₆ − Σ₁₄)/12 instead of
+  *    re-summing rows 15..26 — associativity differences land below the
+  *    1e-6 rounding both engines apply.
+  *  - ADX/±DI: ±DM/TR prefix sums through row q, Wilder running sums
+  *    `s − s/q + x` after; the DX mean seeds ADX at row 2q.
+  *
+  * Outputs carry the reference scaling (rsi, cmo, adx, adx_hist /100;
+  * macd_hist /10). The Wilder and ADX periods thread through (every row
+  * threshold derives from them); MACDFIX is fixed-constant by
+  * definition.
   */
 case class IndicatorPackWindow(
     price: Expression,
@@ -98,7 +112,7 @@ case class IndicatorPackWindow(
     val c = Cast(close, DoubleType)
     val rn1 = Add(rn, Literal(1L))
 
-    // --- Wilder (identical to WilderWindowFunction.updateExpressions)
+    // --- Wilder (RSI/CMO)
     val delta = Subtract(p, prev)
     val g = If(And(IsNotNull(delta), GreaterThan(delta, zeroD)), delta, zeroD)
     val lo = If(And(IsNotNull(delta), LessThan(delta, zeroD)),
@@ -115,7 +129,7 @@ case class IndicatorPackWindow(
       (EqualTo(rn1, seedRow), Divide(Add(lsum, lo), pD))),
       Divide(Add(Multiply(avgl, pm1D), lo), pD))
 
-    // --- MACDFIX (identical to MacdHistWindow.updateExpressions)
+    // --- MACDFIX; fast seed (Σ₂₆ − Σ₁₄)/12, see the class doc
     val psumAll1 = Add(psumAll, p)
     val psum14n = If(LessThanOrEqual(rn1, Literal(14L)), Add(psum14, p), psum14)
     val emas1 = CaseWhen(Seq(
@@ -136,7 +150,7 @@ case class IndicatorPackWindow(
       (EqualTo(rn1, Literal(34L)), Divide(Add(sigsum, macd1), d(9.0)))),
       Add(Multiply(Subtract(macd1, sig), d(0.2)), sig))
 
-    // --- ADX (identical to AdxWindowBase.updateExpressions)
+    // --- ADX / ±DI
     val dp = Subtract(h, prevH)
     val dm = Subtract(prevL, l)
     val pdm = If(And(GreaterThan(dp, dm), GreaterThan(dp, zeroD)), dp, zeroD)
@@ -144,7 +158,7 @@ case class IndicatorPackWindow(
     val tr = Greatest(Seq(Subtract(h, l), Abs(Subtract(h, prevC)),
       Abs(Subtract(l, prevC))))
     def roll(s: Expression, x: Expression): Expression = CaseWhen(Seq(
-      (EqualTo(rn1, Literal(1L)), zeroD),
+      (EqualTo(rn1, Literal(1L)), zeroD), // first row: no prev, no TR/DM yet
       (LessThanOrEqual(rn1, qL), Add(s, x))),
       Add(Subtract(s, Divide(s, qD)), x))
     val sTR1 = roll(sTR, tr)

@@ -3,109 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
-/** RSI/CMO as custom Catalyst `AggregateWindowFunction`s — the
-  * "alternative (stays in SQL engine)" design of SURVEY.md §2 group W-R:
-  * Wilder smoothing expressed as incremental DeclarativeAggregate state
-  * over the running `UnboundedPreceding → CurrentRow` frame (like
-  * `row_number`), so the recursive indicators can run inside the Window
-  * physical operator — same exchange/sort as every frame indicator, no
-  * `groupByKey` hop, no object (de)serialization.
-  *
-  * State machine is identical to [[graft.ind.RecursiveIndicators.scan]]
-  * (TA-Lib seed conventions: SMA of the first `period` gains/losses at
-  * row period+1, Wilder `(prev*(p-1)+x)/p` after; zero-denominator → 0):
-  * buffer = (rn, prev price, gain seed-sum, loss seed-sum, avgGain,
-  * avgLoss); outputs scaled /100 like the reference.
-  */
-abstract class WilderWindowFunction extends AggregateWindowFunction {
-
-  def price: Expression
-  def period: Int
-
-  override def children: Seq[Expression] = Seq(price)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  protected val pD: Literal = Literal(period.toDouble)
-  protected val pm1D: Literal = Literal((period - 1).toDouble)
-  protected val seedRow: Literal = Literal(period.toLong + 1L) // 1-based rn
-
-  protected val rn: AttributeReference =
-    AttributeReference("rn", LongType, nullable = false)()
-  protected val prev: AttributeReference =
-    AttributeReference("prev", DoubleType, nullable = true)()
-  protected val gsum: AttributeReference =
-    AttributeReference("gsum", DoubleType, nullable = false)()
-  protected val lsum: AttributeReference =
-    AttributeReference("lsum", DoubleType, nullable = false)()
-  protected val avgg: AttributeReference =
-    AttributeReference("avgg", DoubleType, nullable = true)()
-  protected val avgl: AttributeReference =
-    AttributeReference("avgl", DoubleType, nullable = true)()
-
-  override val aggBufferAttributes: Seq[AttributeReference] =
-    Seq(rn, prev, gsum, lsum, avgg, avgl)
-
-  private val nullD = Literal.create(null, DoubleType)
-  private val zeroD = Literal(0.0)
-
-  override val initialValues: Seq[Expression] =
-    Seq(Literal(0L), nullD, zeroD, zeroD, nullD, nullD)
-
-  override val updateExpressions: Seq[Expression] = {
-    val priceD = Cast(price, DoubleType)
-    val rn1 = Add(rn, Literal(1L))
-    val delta = Subtract(priceD, prev) // null on first row (prev null)
-    val g = If(And(IsNotNull(delta), GreaterThan(delta, zeroD)), delta, zeroD)
-    val l = If(And(IsNotNull(delta), LessThan(delta, zeroD)),
-      UnaryMinus(delta), zeroD)
-    val inSeed = LessThanOrEqual(rn1, seedRow)
-    val gsum1 = If(inSeed, Add(gsum, g), gsum)
-    val lsum1 = If(inSeed, Add(lsum, l), lsum)
-    val avgg1 = CaseWhen(Seq(
-      (LessThan(rn1, seedRow), nullD),
-      (EqualTo(rn1, seedRow), Divide(Add(gsum, g), pD))),
-      Divide(Add(Multiply(avgg, pm1D), g), pD))
-    val avgl1 = CaseWhen(Seq(
-      (LessThan(rn1, seedRow), nullD),
-      (EqualTo(rn1, seedRow), Divide(Add(lsum, l), pD))),
-      Divide(Add(Multiply(avgl, pm1D), l), pD))
-    Seq(rn1, priceD, gsum1, lsum1, avgg1, avgl1)
-  }
-
-  /** (avgg+avgl)-denominated output once past the seed row; 0 when the
-    * denominator is 0 (TA-Lib convention); null in warm-up. */
-  protected def scaledOutput(num: Expression): Expression = {
-    val tot = Add(avgg, avgl)
-    If(GreaterThanOrEqual(rn, seedRow),
-      If(EqualTo(tot, Literal(0.0)), Literal(0.0), Divide(num, tot)),
-      Literal.create(null, DoubleType))
-  }
-}
-
-/** rsi/100 ∈ [0,1]: avgGain / (avgGain+avgLoss). */
-case class RsiWindow(price: Expression, period: Int = 14)
-    extends WilderWindowFunction {
-  override val evaluateExpression: Expression = scaledOutput(avgg)
-  override def prettyName: String = "graft_rsi_w"
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): RsiWindow =
-    copy(price = newChildren(0))
-}
-
-/** cmo/100 ∈ [-1,1]: (avgGain−avgLoss) / (avgGain+avgLoss). */
-case class CmoWindow(price: Expression, period: Int = 14)
-    extends WilderWindowFunction {
-  override val evaluateExpression: Expression =
-    scaledOutput(Subtract(avgg, avgl))
-  override def prettyName: String = "graft_cmo_w"
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CmoWindow =
-    copy(price = newChildren(0))
-}
-
-/** Wilder ATR (Average True Range) as the same incremental window
-  * state machine — TA-Lib's ATR kernel (the reference's indicator
+/** Wilder ATR (Average True Range) as an incremental window state
+  * machine — TA-Lib's ATR kernel (the reference's indicator
   * family, stockdata/indicators.py:314-457 uses its TRANGE inside ADX):
   *
   *  - TR₁ = high₁ − low₁ (no previous close yet);
@@ -165,24 +64,6 @@ case class AtrWindow(high: Expression, low: Expression, close: Expression,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): AtrWindow =
     copy(high = newChildren(0), low = newChildren(1), close = newChildren(2))
-}
-
-/** Both Wilder outputs from ONE state evaluation:
-  * struct(rsi, cmo) — RSI and CMO share the gain/loss averages, so
-  * evaluating them as separate window functions runs the state machine
-  * twice; this emits both from one pass. */
-case class WilderPairWindow(price: Expression, period: Int = 14)
-    extends WilderWindowFunction {
-  override def dataType: DataType = StructType(Seq(
-    StructField("rsi", DoubleType), StructField("cmo", DoubleType)))
-  override val evaluateExpression: Expression =
-    CreateNamedStruct(Seq(
-      Literal("rsi"), scaledOutput(avgg),
-      Literal("cmo"), scaledOutput(Subtract(avgg, avgl))))
-  override def prettyName: String = "graft_wilder_w"
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): WilderPairWindow =
-    copy(price = newChildren(0))
 }
 
 /** Single/double/triple EMA from ONE incremental state machine:

@@ -1,9 +1,5 @@
 package graft.ind
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.DoubleType
-
 import graft.model.IndicatorConfig
 
 /** Group W-R recursive indicators (SURVEY.md §2): RSI, CMO, MACDFIX
@@ -12,20 +8,15 @@ import graft.model.IndicatorConfig
   * (reference calls: stockdata/indicators.py:324-334, 403-413, 432-445,
   * 459-487).
   *
-  * Spark mapping: a single O(n) scan per key inside
-  * `Dataset.groupByKey(...).flatMapGroups` — the idiomatic escape hatch
-  * for order-dependent state (SURVEY.md §2 "Spark strategy for W-R").
-  * The scan itself is a pure function `(price, high, low, close) =>
-  * outputs`, unit-testable without Spark. Groups are one (ticker[,
-  * island]) series; at the 100 TB design point keys include the trading
-  * day so group size stays bounded (≤ ~420 rows — SURVEY.md §7.4) and
-  * the iterator is materialized per group only.
-  *
-  * The production pipeline does not run this scan: it computes the same
-  * five outputs with the fused [[graft.functions.IndicatorPackWindow]]
-  * window kernel ([[IndicatorPipeline.tail]]). The scan is the
-  * reference-faithful cross-check (the oracle-gated `ind_recursive`
-  * query) the kernel is pinned against.
+  * This object holds the two references for the family, not a Spark
+  * implementation: [[scan]], a single O(n) pass over one sorted series
+  * as a pure function `(price, high, low, close) => outputs`,
+  * unit-testable without Spark; and [[sqlStages]], its DuckDB
+  * recursive-CTE mirror, the oracle of every query that computes the
+  * family. Spark computes the same five outputs with the
+  * [[graft.functions.IndicatorPackWindow]] window kernel (`graft_ind_w`,
+  * used by [[IndicatorPipeline.tail]] and the `ind_recursive` query);
+  * the tests pin that kernel against [[scan]].
   *
   * Scaling matches the reference: rsi/cmo/adx/adx_hist are emitted /100
   * (as fractions), macd_hist /10 (indicators.py:332,411,443,485-487;
@@ -43,7 +34,8 @@ import graft.model.IndicatorConfig
   */
 object RecursiveIndicators {
 
-  /** Names of the five columns [[addAll]] appends. */
+  /** Names of the five outputs, in [[scan]]'s column order (also the
+    * field names of `graft_ind_w`'s struct). */
   val outputColumns: Seq[String] =
     Seq("rsi", "cmo", "macd_hist", "adx", "adx_hist")
 
@@ -151,73 +143,6 @@ object RecursiveIndicators {
       i += 1
     }
     out
-  }
-
-  /** Appends [[outputColumns]] to `df`, preserving all input columns.
-    *
-    * One shuffle on the concatenated `part` key; each group is sorted
-    * in memory by `order` (all LongType) and scanned once. No
-    * driver-side collection.
-    *
-    * @param part  grouping key columns (e.g. ticker, island)
-    * @param order within-group ordering columns (LongType, e.g. ws)
-    * @param price adj-close series for RSI/CMO/MACD
-    */
-  def addAll(
-      df: DataFrame,
-      part: Seq[String],
-      order: Seq[String],
-      price: String = "close",
-      high: String = "high",
-      low: String = "low",
-      close: String = "close",
-      cfg: IndicatorConfig = IndicatorConfig()): DataFrame = {
-
-    val schema = df.schema
-    val outSchema = outputColumns.foldLeft(schema)((s, c) => s.add(c, DoubleType))
-    val pIdx = part.map(schema.fieldIndex).toArray
-    val oIdx = order.map(schema.fieldIndex).toArray
-    val prI = schema.fieldIndex(price)
-    val hiI = schema.fieldIndex(high)
-    val loI = schema.fieldIndex(low)
-    val clI = schema.fieldIndex(close)
-
-    val cmp = new java.util.Comparator[Row] with Serializable {
-      override def compare(a: Row, b: Row): Int = {
-        var k = 0
-        while (k < oIdx.length) {
-          val c = java.lang.Long.compare(
-            a.getAs[Number](oIdx(k)).longValue, b.getAs[Number](oIdx(k)).longValue)
-          if (c != 0) return c
-          k += 1
-        }
-        0
-      }
-    }
-
-    df.groupByKey(r => pIdx.map(i => String.valueOf(r.get(i))).mkString("\u0000"))(
-        Encoders.STRING)
-      .flatMapGroups { (_: String, it: Iterator[Row]) =>
-        val rows = it.toArray
-        java.util.Arrays.sort(rows, cmp)
-        val n = rows.length
-        val pr = new Array[Double](n); val hi = new Array[Double](n)
-        val lo = new Array[Double](n); val cl = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          val r = rows(i)
-          pr(i) = r.getAs[Number](prI).doubleValue
-          hi(i) = r.getAs[Number](hiI).doubleValue
-          lo(i) = r.getAs[Number](loI).doubleValue
-          cl(i) = r.getAs[Number](clI).doubleValue
-          i += 1
-        }
-        val res = scan(pr, hi, lo, cl, cfg)
-        rows.iterator.zipWithIndex.map { case (r, j) =>
-          Row.fromSeq(r.toSeq ++ res(j))
-        }
-      }(Encoders.row(outSchema))
-      .select(schema.fieldNames.map(col).toIndexedSeq ++ outputColumns.map(col): _*)
   }
 
   /** DuckDB recursive-CTE chain mirroring [[scan]] formula-for-formula;

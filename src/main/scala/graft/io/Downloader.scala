@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -41,7 +41,8 @@ object Downloader {
     * Expects `window_start` plus, per ticker, columns named
     * `{ticker}:{Field}` with yfinance field names (`Volume Open Close
     * High Low Adj Close`); emits the fixed 8-column [[Schemas.rawBars]]
-    * layout. One explode of per-ticker structs — row-local, no shuffle.
+    * layout, NaN cells as nulls. One explode of per-ticker structs —
+    * row-local, no shuffle.
     */
   def flattenWide(wide: DataFrame, tickers: Seq[String]): DataFrame = {
     val fields = Seq("Volume", "Open", "Close", "High", "Low", "Adj Close")
@@ -63,13 +64,18 @@ object Downloader {
           fields.map(f => col(s"`$t:$f`").cast("double")
             .as(f.toLowerCase.replace(" ", "_"))): _*)
     }
+    // A NaN cell becomes null, as pandas → pyarrow writes it: Interpolate
+    // fills nulls, while a NaN would poison every later Wilder/EMA state
+    // of its island and P4's dropna would then drop the rest of it.
+    // Mapped after the explode: 6 expressions, not 6 per ticker.
+    def cell(c: String): Column =
+      nanvl(col(s"r.$c"), lit(null).cast("double")).as(c)
     wide
       .select(col("window_start").cast("long").as("window_start"),
         explode(array(rows: _*)).as("r"))
-      .select(col("r.ticker").as("ticker"), col("r.volume").as("volume"),
-        col("r.open").as("open"), col("r.close").as("close"),
-        col("r.high").as("high"), col("r.low").as("low"),
-        col("r.adj_close").as("adj_close"), col("window_start"))
+      .select(col("r.ticker").as("ticker"), cell("volume"), cell("open"),
+        cell("close"), cell("high"), cell("low"), cell("adj_close"),
+        col("window_start"))
   }
 
   /** E1 main: the full downloader task for one logical date.

@@ -98,9 +98,9 @@ object EtlQueries {
     // Faithful E2 (SURVEY.md §3): the reference's full 18-column
     // indicator table — IndicatorPipeline's own tail over the
     // interpolated bars, so the flagship is ONE hash exchange
-    // end-to-end. The flatMapGroups scan remains oracle-gated as
-    // ind_recursive; its parity with the window kernels is pinned by
-    // ind_recursive vs ind_recursive_window sharing per-value hashes.
+    // end-to-end. Its recursive columns come from the same graft_ind_w
+    // kernel ind_recursive runs; PipelineSpec pins that kernel against
+    // RecursiveIndicators.scan.
     "pipeline_full" -> pipelineFull,
 
     // IndicatorPipeline.runRange's 100 TB multi-day shape, oracle-gated:

@@ -317,11 +317,12 @@ object Ind2Queries {
     }),
 
     // ADXR(14): (ADX + ADX₁₄ bars ago)/2 — one lag over the same
-    // exchange the ADX state machine already runs on.
+    // exchange the fused recursive kernel's ADX state already runs on.
     "ind_adxr" -> ((s, dir) => {
       GraftFunctions.register(s)
       EventBars.bars(s, dir)
-        .withColumn("adx", expr("graft_adx_w(high, low, close)").over(w))
+        .withColumn("adx",
+          expr("graft_ind_w(close, high, low, close)").over(w).getField("adx"))
         .select(col("ticker"), col("t"), col("event_id"),
           r6((col("adx") + lag(col("adx"), 14).over(w)) / lit(2.0))
             .as("adxr"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ind.{FrameIndicators, RecursiveIndicators}
@@ -27,6 +28,25 @@ object IndicatorQueries {
 
   private def r6(c: String) = Rounding.r6(col(c)).as(c)
 
+  /** The fused recursive kernel's five outputs: one running-frame
+    * Window on the bars' ticker exchange. */
+  private val indRecursive: (SparkSession, String) => DataFrame = (s, dir) => {
+    graft.functions.GraftFunctions.register(s)
+    val w = Window.partitionBy("ticker").orderBy("t", "event_id")
+    EventBars.bars(s, dir)
+      .withColumn("_x", expr("graft_ind_w(close, high, low, close)").over(w))
+      .select(col("ticker") +: col("t") +: RecursiveIndicators.outputColumns.map(c =>
+        Rounding.r6(col(s"_x.$c")).as(c)): _*)
+  }
+
+  private val indRecursiveOracle: String =
+    s"""WITH RECURSIVE bars AS (${EventBars.sqlBars}),
+       |${RecursiveIndicators.sqlStages("bars", Seq("ticker"), Seq("t", "event_id"))}
+       |SELECT ticker, t, (round(rsi, 6) + 0.0) AS rsi, (round(cmo, 6) + 0.0) AS cmo,
+       |  (round(macd_hist, 6) + 0.0) AS macd_hist, (round(adx, 6) + 0.0) AS adx,
+       |  (round(adx_hist, 6) + 0.0) AS adx_hist
+       |FROM ri_final""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ind_rocp" -> ((s, dir) =>
       fi(s, dir).select(col("ticker") +: col("t") +:
@@ -43,27 +63,10 @@ object IndicatorQueries {
       fi(s, dir).select(col("ticker"), col("t"), r6("ppo"))),
     "ind_stochf" -> ((s, dir) =>
       fi(s, dir).select(col("ticker"), col("t"), r6("sok"), r6("sok_hist"))),
-    // R1-R4 recursive kernels (Wilder/EMA) via one flatMapGroups scan.
-    "ind_recursive" -> ((s, dir) =>
-      RecursiveIndicators.addAll(EventBars.bars(s, dir), Part, Order)
-        .select(col("ticker"), col("t"), r6("rsi"), r6("cmo"),
-          r6("macd_hist"), r6("adx"), r6("adx_hist"))),
-
-    // R1-R4 via the custom AggregateWindowFunction path (SURVEY §2
-    // "alternative: stays in SQL engine"): Wilder/EMA/ADX state as
-    // declarative aggregate expressions inside the Window operator —
-    // same values as the flatMapGroups scan, no groupByKey exchange.
-    "ind_recursive_window" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
-      val w = Window.partitionBy("ticker").orderBy("t", "event_id")
-      EventBars.bars(s, dir).select(col("ticker"), col("t"),
-        Rounding.r6(expr("graft_rsi_w(close)").over(w)).as("rsi"),
-        Rounding.r6(expr("graft_cmo_w(close)").over(w)).as("cmo"),
-        Rounding.r6(expr("graft_macd_hist_w(close)").over(w)).as("macd_hist"),
-        Rounding.r6(expr("graft_adx_w(high, low, close)").over(w)).as("adx"),
-        Rounding.r6(expr("graft_adx_hist_w(high, low, close)").over(w)).as("adx_hist"))
-    }),
+    // R1-R4 recursive kernels (Wilder/EMA/ADX); ind_recursive_window
+    // is the older registry name: same function, same oracle.
+    "ind_recursive" -> indRecursive,
+    "ind_recursive_window" -> indRecursive,
 
     // W8 CCI — dead code in the reference (_get_cci is never called,
     // indicators.py:372-384) but part of its operator inventory.
@@ -71,7 +74,6 @@ object IndicatorQueries {
     // so the frame is materialized (collect_list); the fold itself is
     // the native codegen'd graft_absdev_sum, not an interpreted HOF.
     "ind_cci" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       graft.functions.GraftFunctions.register(s)
       val w = Window.partitionBy("ticker").orderBy("t", "event_id")
         .rowsBetween(-13, 0)
@@ -99,21 +101,8 @@ object IndicatorQueries {
     "ind_ppo" -> sql("ticker, t, (round(ppo, 6) + 0.0) AS ppo"),
     "ind_stochf" -> sql(
       "ticker, t, (round(sok, 6) + 0.0) AS sok, (round(sok_hist, 6) + 0.0) AS sok_hist"),
-    "ind_recursive" ->
-      s"""WITH RECURSIVE bars AS (${EventBars.sqlBars}),
-         |${RecursiveIndicators.sqlStages("bars", Seq("ticker"), Seq("t", "event_id"))}
-         |SELECT ticker, t, (round(rsi, 6) + 0.0) AS rsi, (round(cmo, 6) + 0.0) AS cmo,
-         |  (round(macd_hist, 6) + 0.0) AS macd_hist, (round(adx, 6) + 0.0) AS adx,
-         |  (round(adx_hist, 6) + 0.0) AS adx_hist
-         |FROM ri_final""".stripMargin,
-
-    "ind_recursive_window" ->
-      s"""WITH RECURSIVE bars AS (${EventBars.sqlBars}),
-         |${RecursiveIndicators.sqlStages("bars", Seq("ticker"), Seq("t", "event_id"))}
-         |SELECT ticker, t, (round(rsi, 6) + 0.0) AS rsi, (round(cmo, 6) + 0.0) AS cmo,
-         |  (round(macd_hist, 6) + 0.0) AS macd_hist, (round(adx, 6) + 0.0) AS adx,
-         |  (round(adx_hist, 6) + 0.0) AS adx_hist
-         |FROM ri_final""".stripMargin,
+    "ind_recursive" -> indRecursiveOracle,
+    "ind_recursive_window" -> indRecursiveOracle,
 
     "ind_cci" ->
       s"""WITH bars AS (${EventBars.sqlBars}),

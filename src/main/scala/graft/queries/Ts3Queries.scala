@@ -137,7 +137,7 @@ object Ts3Queries {
     }),
 
     // STOCHRSI(14, 14): fast %K of the RSI series. RSI comes from the
-    // Wilder window kernel (first valid at rn = 15); the stochastic
+    // fused recursive kernel (first valid at rn = 15); the stochastic
     // band is valid once the trailing 14-bar frame holds only non-null
     // RSI values (rn >= 28), so null-skipping min/max can't diverge.
     "ind_stochrsi" -> ((s, dir) => {
@@ -145,7 +145,8 @@ object Ts3Queries {
       val rb = w.rowsBetween(-13, 0)
       EventBars.bars(s, dir)
         .withColumn("rn", row_number().over(w))
-        .withColumn("rsi", expr("graft_rsi_w(close)").over(w))
+        .withColumn("rsi",
+          expr("graft_ind_w(close, high, low, close)").over(w).getField("rsi"))
         .withColumn("minr", min(col("rsi")).over(rb))
         .withColumn("maxr", max(col("rsi")).over(rb))
         .select(col("ticker"), col("t"), col("event_id"),

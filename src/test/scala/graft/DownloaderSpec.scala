@@ -97,6 +97,34 @@ class DownloaderSpec extends SparkSpec {
     assert(none.count() == 0L)
   }
 
+  test("flattenWide: a NaN cell is written as null and interpolated, not dropped") {
+    import org.apache.spark.sql.functions.{col, isnan, lit, when}
+    // pandas → pyarrow stores a NaN cell as a parquet null; a NaN that
+    // reached the raw day would poison BBB's recursive indicators from
+    // bar 10 on, and P4's dropna would then drop all of BBB's rows.
+    val csv = tickerCsv(Seq("AAA", "BBB"))
+    val base = java.nio.file.Files.createTempDirectory("dlnan").toString
+    val nanAt = openNs + 10 * minNs
+    Downloader.run(spark, csv, date.toString, "1m", base) { tc =>
+      Some(Seq("Close", "Adj Close").foldLeft(wideFixture(tc)) { (w, f) =>
+        w.withColumn(s"BBB:$f", when(col("window_start") === nanAt,
+          lit(Double.NaN)).otherwise(col(s"`BBB:$f`")))
+      })
+    }
+    val day = BarsIO.readDay(spark, base, "1m", date.toString)
+      .select(graft.model.Schemas.rawBars.fieldNames.map(col).toIndexedSeq: _*)
+    val cell = day.filter(col("ticker") === "BBB" && col("window_start") === nanAt)
+      .select("close", "adj_close").collect()
+    assert(cell.length == 1 && cell(0).isNullAt(0) && cell(0).isNullAt(1))
+    assert(day.filter(isnan(col("close")) || isnan(col("adj_close"))).isEmpty)
+
+    // BBB keeps its 7 post-warm-up rows, all after the filled bar
+    val bbb = IndicatorPipeline.run(day, date)
+      .filter(col("ticker").startsWith("BBB")).collect()
+    assert(bbb.length == 7)
+    assert(bbb.forall(_.getLong(0) > nanAt))
+  }
+
   test("empty fetches mean nothing is written (reference early return)") {
     val csv = tickerCsv(Seq("AAA", "BBB"))
     val base = java.nio.file.Files.createTempDirectory("dl0").toString

@@ -389,7 +389,16 @@ class OpsSpec extends SparkSpec {
     assert(ads == 3.0)
     // arity violations fail at analysis, not silently
     intercept[Exception](spark.sql("SELECT graft_simhash(array(1L))").collect())
-    intercept[Exception](spark.sql("SELECT graft_macd_hist_w(1.0, 2)").collect())
+    // graft_ind_w: a 3-argument call and a non-literal period both fail
+    // when the query is analysed, for their own reason; the same call
+    // with a literal period analyses.
+    val bars = "FROM VALUES (1.0D, 7) AS v(c, n)"
+    spark.sql(s"SELECT graft_ind_w(c, c, c, c, 7) OVER (ORDER BY c) $bars")
+    Seq(s"SELECT graft_ind_w(c, c, c) OVER (ORDER BY c) $bars",
+      s"SELECT graft_ind_w(c, c, c, c, n) OVER (ORDER BY c) $bars").foreach { q =>
+      val e = intercept[Exception](spark.sql(q))
+      assert(e.getMessage.contains("graft_ind_w expects"), e.getMessage)
+    }
   }
 
   test("graft_atr_w matches a hand-iterated Wilder ATR") {

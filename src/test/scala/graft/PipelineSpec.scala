@@ -19,6 +19,7 @@ class PipelineSpec extends SparkSpec {
   private val date = LocalDate.of(2024, 3, 5) // EST (pre-DST): open = 14:30 UTC
   private val (openNs, closeNs) = MarketCalendar.marketOpenCloseNanos(date)
   private val minNs = 60L * 1000000000L
+  private val sf = "/root/testdata/sf0.001"
 
   /** 40 consecutive market minutes + pre/at-close/post rows + a 2-row
     * tail island after a 5-minute break. */
@@ -146,51 +147,87 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  /** Runs `graft_ind_w(close, high, low, close[, p, q])` over
+    * `(series, i, close, high, low)` rows, one running window per
+    * series, and checks every output of every row against
+    * [[graft.ind.RecursiveIndicators.scan]] on the same series. */
+  private def assertKernelMatchesScan(
+      rows: Seq[(String, Long, Double, Double, Double)],
+      cfg: IndicatorConfig): Unit = {
+    import org.apache.spark.sql.functions.{col, expr}
+    graft.functions.GraftFunctions.register(spark)
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row(r._1, r._2, r._3, r._4, r._5)): _*),
+      StructType(Seq(StructField("s", StringType), StructField("i", LongType),
+        StructField("c", DoubleType), StructField("h", DoubleType),
+        StructField("l", DoubleType))))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("s").orderBy("i")
+    val got = df
+      .withColumn("_x", expr(s"graft_ind_w(c, h, l, c, ${cfg.rsiPeriod}, " +
+        s"${cfg.adxPeriod})").over(w))
+      .select(col("s") +: col("i") +: graft.ind.RecursiveIndicators.outputColumns
+        .map(c => col(s"_x.$c")): _*)
+      .collect().groupBy(_.getString(0))
+    assert(got.keySet == rows.map(_._1).toSet)
+    rows.groupBy(_._1).foreach { case (series, rs) =>
+      val sorted = rs.sortBy(_._2)
+      val close = sorted.map(_._3).toArray
+      val want = graft.ind.RecursiveIndicators.scan(
+        close, sorted.map(_._4).toArray, sorted.map(_._5).toArray, close, cfg)
+      val act = got(series).sortBy(_.getLong(1))
+      assert(act.length == sorted.length, series)
+      act.zipWithIndex.foreach { case (r, i) =>
+        (0 until 5).foreach { j =>
+          val exp = want(i)(j)
+          val v = if (r.isNullAt(j + 2)) null else r.getDouble(j + 2)
+          // macd_hist (col 2) carries the kernel's documented deliberate
+          // arithmetic difference — the fast EMA seed is (Σ₂₆ − Σ₁₄)/12,
+          // not a re-sum of rows 15..26 — so it matches to ~1e-12, far
+          // below the 1e-6 rounding both engines apply; the four
+          // period-threaded outputs are bit-identical.
+          val tol = if (j == 2) 1e-9 else 0.0
+          assert((exp == null && v == null) ||
+            (exp != null && v != null &&
+              math.abs(exp.asInstanceOf[Double] - v.asInstanceOf[Double]) <= tol),
+            s"$series row $i col $j: scan=$exp window=$v")
+        }
+      }
+    }
+  }
+
   test("fused window kernel ≡ scan at non-default periods (wilder=7, adx=10)") {
     // The graft_ind_w kernel threads BOTH its periods; this pins the
     // non-default config path runRange used to hard-reject: every one
     // of the five outputs must match the reference-faithful scan
     // bit-for-bit at (rsiPeriod=cmoPeriod=7, adxPeriod=10).
-    val cfg = graft.model.IndicatorConfig(
-      rsiPeriod = 7, cmoPeriod = 7, adxPeriod = 10)
-    val n = 80
-    val close = Array.tabulate(n)(i => 100.0 + math.sin(i * 0.7) * 3 + (i % 5))
-    val high = close.map(_ + 1.5)
-    val low = close.map(_ - 1.2)
-    val want = graft.ind.RecursiveIndicators.scan(close, high, low, close, cfg)
-    graft.functions.GraftFunctions.register(spark)
-    val rows = (0 until n).map(i =>
-      Row(i.toLong, close(i), high(i), low(i)))
-    val df = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(StructField("i", LongType),
-        StructField("c", DoubleType), StructField("h", DoubleType),
-        StructField("l", DoubleType))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(org.apache.spark.sql.functions.lit(1)).orderBy("i")
-    val got = df
-      .withColumn("_x", org.apache.spark.sql.functions
-        .expr("graft_ind_w(c, h, l, c, 7, 10)").over(w))
-      .selectExpr("i", "_x.rsi", "_x.cmo", "_x.macd_hist", "_x.adx", "_x.adx_hist")
-      .collect().sortBy(_.getLong(0))
-    assert(got.length == n)
-    got.foreach { r =>
-      val i = r.getLong(0).toInt
-      (0 until 5).foreach { j =>
-        val exp = want(i)(j)
-        val act = if (r.isNullAt(j + 1)) null else r.getDouble(j + 1)
-        // macd_hist (col 2) carries the kernel's documented deliberate
-        // arithmetic difference — the fast EMA seed is (Σ₂₆ − Σ₁₄)/12,
-        // not a re-sum of rows 15..26 — so it matches to ~1e-12, far
-        // below the 1e-6 rounding both engines apply; the four
-        // period-threaded outputs are bit-identical.
-        val tol = if (j == 2) 1e-9 else 0.0
-        assert((exp == null && act == null) ||
-          (exp != null && act != null &&
-            math.abs(exp.asInstanceOf[Double] - act.asInstanceOf[Double]) <= tol),
-          s"row $i col $j: scan=$exp window=$act")
-      }
+    val synthetic = (0 until 80).map { i =>
+      val c = 100.0 + math.sin(i * 0.7) * 3 + (i % 5)
+      ("sin", i.toLong, c, c + 1.5, c - 1.2)
     }
+    assertKernelMatchesScan(synthetic,
+      IndicatorConfig(rsiPeriod = 7, cmoPeriod = 7, adxPeriod = 10))
+
+    // Default periods over the registry's event bars, one series per
+    // ticker in (t, event_id) order — the ind_recursive input.
+    val bars = graft.queries.EventBars.bars(spark, sf)
+      .select("ticker", "t", "event_id", "close", "high", "low")
+      .collect().groupBy(_.getString(0)).toSeq.flatMap { case (tk, rs) =>
+        rs.sortBy(r => (r.getLong(1), r.getLong(2))).zipWithIndex.map {
+          case (r, i) => (tk, i.toLong, r.getDouble(3), r.getDouble(4), r.getDouble(5))
+        }
+      }
+    assert(bars.map(_._1).distinct.length > 1 && bars.length > 100)
+    assertKernelMatchesScan(bars, IndicatorConfig())
+
+    // A flat start (no gains, losses, ranges or moves: RSI/CMO's and
+    // ±DI's zero denominators), then a constant range with no
+    // directional move (DX's zero denominator), then a ramp.
+    val flat = (0 until 120).map { i =>
+      val c = if (i < 80) 100.0 else 100.0 + (i - 79) * 0.5
+      val r = if (i < 40) 0.0 else 1.0
+      ("flat", i.toLong, c, c + r, c - r)
+    }
+    assertKernelMatchesScan(flat, IndicatorConfig())
   }
 
   test("bucketed tables join without any exchange") {

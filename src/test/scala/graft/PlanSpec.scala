@@ -102,9 +102,7 @@ class PlanSpec extends SparkSpec {
 
   test("pipeline_full runs end-to-end on ONE hash exchange") {
     // the recursive family rides the fused AggregateWindowFunction on
-    // the same (ticker, island) window as the frame indicators — the
-    // old groupByKey hop is gone (flatMapGroups survives as the
-    // ind_recursive cross-check)
+    // the same (ticker, island) window as the frame indicators
     assert(shuffles(plan("pipeline_full")) == 1)
   }
 
@@ -773,8 +771,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("EMA-kernel composites (apo/adxr/adosc) stay on one exchange") {
-    Seq("ind_apo", "ind_adxr", "ind_adosc").foreach { q =>
-      assert(shuffles(plan(q)) == 1, q)
+    // ind_recursive[_window] run the same graft_ind_w window kernel as
+    // adxr: no groupByKey hop (MapGroups) beside the window's exchange
+    Seq("ind_apo", "ind_adxr", "ind_adosc", "ind_recursive",
+      "ind_recursive_window").foreach { q =>
+      val p = plan(q)
+      assert(shuffles(p) == 1, q)
+      assert(!p.contains("MapGroups"), q)
     }
   }
 
