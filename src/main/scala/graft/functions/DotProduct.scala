@@ -216,6 +216,12 @@ object GraftFunctions {
         cs(0), cs(1), cs(2), cs(3),
         if (cs.length > 4) litInt(cs(4), "graft_ind_w") else 14,
         if (cs.length > 5) litInt(cs(5), "graft_ind_w") else 14))),
+    ("graft_frame_w", classOf[FrameIndicatorWindow],
+      arity("graft_frame_w", 15)(cs => {
+        val p = cs.drop(5).map(litInt(_, "graft_frame_w"))
+        FrameIndicatorWindow(cs(0), cs(1), cs(2), cs(3), cs(4),
+          FramePeriods(p(0), p(1), p(2), p(3), p(4), p(5), p(6), p(7), p(8), p(9)))
+      })),
     ("graft_kalman_w", classOf[KalmanWindow],
       arity("graft_kalman_w", 1)(cs => KalmanWindow(cs(0)))),
     ("graft_ha_w", classOf[HeikinAshiWindow],

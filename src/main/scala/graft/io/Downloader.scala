@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -87,7 +87,8 @@ object Downloader {
     * @param chunkSize  fetch batch size (reference: 10)
     * @param fetch      per-chunk wide-frame fetch; None ≙ yf.download
     *                   returning an empty frame (chunk skipped)
-    * @return number of bar rows written (0 = no data, nothing written —
+    * @return number of bar rows written, counted by an `Observation` on
+    *         the write itself (0 = no data, no day partition written —
     *         mirrors the reference's early return)
     */
   def run(
@@ -103,12 +104,13 @@ object Downloader {
     val chunks = breakChunks(tickers, chunkSize)
     val parts = chunks.flatMap(tc => fetch(tc).map(flattenWide(_, tc)))
     if (parts.isEmpty) return 0L
+    // The write counts its own rows, so the flatten runs exactly once;
+    // a write of zero rows creates no partition directory.
+    val rows = Observation()
     val all = parts.reduce(_.unionByName(_))
       .select(Schemas.rawBars.fieldNames.map(col).toIndexedSeq: _*)
-    // isEmpty short-circuits at the first row; the row count comes from
-    // the written files so the flatten computes exactly once (the write)
-    if (all.isEmpty) return 0L
+      .observe(rows, count(lit(1)).as("n"))
     BarsIO.writePartitioned(all, base, interval, ds)
-    BarsIO.readDay(spark, base, interval, ds).count()
+    rows.get("n").asInstanceOf[Long]
   }
 }

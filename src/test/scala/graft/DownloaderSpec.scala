@@ -132,4 +132,27 @@ class DownloaderSpec extends SparkSpec {
     assert(n == 0L)
     assert(!new java.io.File(base).toPath.resolve("interval=1m").toFile.exists)
   }
+
+  test("zero-row fetched frames: nothing written, 0 rows counted") {
+    val csv = tickerCsv(Seq("AAA", "BBB"))
+    val base = java.nio.file.Files.createTempDirectory("dlz").toString
+    val n = Downloader.run(spark, csv, date.toString, "1m", base) { tc =>
+      Some(wideFixture(tc).limit(0))
+    }
+    assert(n == 0L)
+    assert(!new java.io.File(base).toPath.resolve("interval=1m").toFile.exists)
+  }
+
+  test("one empty chunk among full ones: the count is the rows written") {
+    // 23 CSV symbols + SPY/VOO = chunks of 10/10/5; the second is empty
+    val csv = tickerCsv((1 to 23).map(i => f"TK$i%02d"))
+    val base = java.nio.file.Files.createTempDirectory("dl1").toString
+    var chunk = 0
+    val n = Downloader.run(spark, csv, date.toString, "1m", base) { tc =>
+      chunk += 1
+      Some(if (chunk == 2) wideFixture(tc).limit(0) else wideFixture(tc))
+    }
+    assert(n == 15L * 40)
+    assert(n == BarsIO.readDay(spark, base, "1m", date.toString).count())
+  }
 }

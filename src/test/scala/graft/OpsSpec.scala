@@ -399,6 +399,26 @@ class OpsSpec extends SparkSpec {
       val e = intercept[Exception](spark.sql(q))
       assert(e.getMessage.contains("graft_ind_w expects"), e.getMessage)
     }
+    // graft_frame_w: the wrong arity, a non-literal or non-positive
+    // period, another frame and a missing OVER all fail at analysis.
+    def frame(periods: String, over: String) =
+      s"SELECT graft_frame_w(c, c, c, c, c, $periods) $over $bars"
+    val ok = "6, 14, 7, 14, 28, 25, 5, 3, 12, 26"
+    spark.sql(frame(ok, "OVER (ORDER BY c)"))
+    Seq(
+      s"SELECT graft_frame_w(c, c, c, c, c) OVER (ORDER BY c) $bars" ->
+        "graft_frame_w expects 15 argument(s)",
+      frame(ok.replace("25", "n"), "OVER (ORDER BY c)") ->
+        "graft_frame_w expects a literal INT",
+      frame(ok.replace("25", "0"), "OVER (ORDER BY c)") ->
+        "graft_frame_w periods must be positive",
+      frame(ok, "OVER (ORDER BY c ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)") ->
+        "must match the required frame",
+      frame(ok, "") -> "WINDOW_FUNCTION_WITHOUT_OVER_CLAUSE"
+    ).foreach { case (q, msg) =>
+      val e = intercept[Exception](spark.sql(q))
+      assert(e.getMessage.contains(msg), s"$q: ${e.getMessage}")
+    }
   }
 
   test("graft_atr_w matches a hand-iterated Wilder ATR") {

@@ -2,7 +2,7 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.etl.{MarketCalendar, Validate}
@@ -228,6 +228,80 @@ class PipelineSpec extends SparkSpec {
       ("flat", i.toLong, c, c + r, c - r)
     }
     assertKernelMatchesScan(flat, IndicatorConfig())
+  }
+
+  /** FrameIndicators.addAll (the graft_frame_w kernel) against the
+    * window-expression reference [[FrameIndicatorsWindowRef.addAll]]:
+    * every output column of every row, doubles by raw bits, nulls equal. */
+  private def assertFrameKernelMatchesWindows(df: DataFrame, part: Seq[String],
+      order: Seq[String], price: String, cfg: IndicatorConfig): Unit = {
+    import org.apache.spark.sql.functions.col
+    val outs = graft.functions.FrameIndicatorWindow.fieldNames(cfg.numPrevRocp)
+    val keys = part ++ order
+    def rows(d: DataFrame): Map[Seq[Any], Row] =
+      d.select((keys ++ outs).map(col): _*).collect()
+        .map(r => r.toSeq.take(keys.length) -> r).toMap
+    val got = rows(graft.ind.FrameIndicators.addAll(df, part, order, price, cfg))
+    val want = rows(FrameIndicatorsWindowRef.addAll(df, part, order, price, cfg))
+    assert(got.size == df.count() && got.keySet == want.keySet)
+    want.foreach { case (k, w) =>
+      val g = got(k)
+      outs.indices.map(_ + keys.length).foreach { j =>
+        val same =
+          if (w.isNullAt(j) || g.isNullAt(j)) w.isNullAt(j) && g.isNullAt(j)
+          else if (outs(j - keys.length) == "rn") w.getInt(j) == g.getInt(j)
+          else java.lang.Double.doubleToRawLongBits(w.getDouble(j)) ==
+            java.lang.Double.doubleToRawLongBits(g.getDouble(j))
+        assert(same, s"$k ${outs(j - keys.length)}: windows=${w.get(j)} kernel=${g.get(j)}")
+      }
+    }
+  }
+
+  test("graft_frame_w ≡ the window-expression formulation, bit for bit") {
+    val odd = IndicatorConfig(mfiPeriod = 5, ultoscPeriod1 = 3, ultoscPeriod2 = 5,
+      ultoscPeriod3 = 9, aroonoscPeriod = 7, stochFastK = 4, stochFastD = 2,
+      ppoFast = 5, ppoSlow = 9, numPrevRocp = 3)
+
+    // The registry's event bars, one series per ticker in (t, event_id) order.
+    val bars = graft.queries.EventBars.bars(spark, sf)
+    assert(bars.count() > 100)
+    Seq(IndicatorConfig(), odd).foreach(cfg =>
+      assertFrameKernelMatchesWindows(bars, Seq("ticker"), Seq("t", "event_id"),
+        "close", cfg))
+
+    // Rows (series, i, adj, close, high, low, volume); null is a null cell.
+    // A flat stretch: no move, no range, no money flow (the zero
+    // denominators of MFI, ULTOSC and STOCHF), then ±0.0 adjusted
+    // prices (PPO's zero SMA), then a ramp.
+    val flat = (0 until 100).map { i =>
+      val adj = if (i < 40) 100.0 else if (i < 80) (if (i % 2 == 0) 0.0 else -0.0)
+        else i - 79.0
+      val c = if (i < 80) 100.0 else 100.0 + (i - 79) * 0.5
+      Row("flat", i, adj, c, c, c, 1000.0)
+    }
+    // ±0.0 and equal highs/lows inside the AROONOSC and STOCHF frames.
+    val ties = (0 until 90).map { i =>
+      val z = if (i % 3 == 0) -0.0 else 0.0
+      val (h, l, c) =
+        if (i < 30) (z, -z, z)
+        else if (i < 60) (1.0, z, -z)
+        else (100.0 + (i % 4) * 0.5, 99.0 - (i % 3) * 0.5, 99.5 + (i % 2) * 0.5)
+      Row("ties", i, c, c, h, l, 10.0 + i % 5)
+    }
+    // A walk with null adj, close, high, low and volume cells, and NaNs.
+    val holes = (0 until 150).map { i =>
+      val c = 50.0 + 4.0 * math.sin(i * 0.37) + (i % 7) * 0.25
+      def cell(x: Double, every: Int, at: Int): Any = if (i % every == at) null else x
+      Row("holes", i, cell(c * 1.01, 19, 8), cell(c, 17, 6),
+        if (i == 60) Double.NaN else cell(c + 1.0, 7, 3),
+        if (i == 95) Double.NaN else cell(c - 1.0, 11, 5), cell(1000.0 + i, 13, 4))
+    }
+    val schema = StructType(Seq(StructField("s", StringType), StructField("i", IntegerType)) ++
+      Seq("adj", "close", "high", "low", "volume").map(StructField(_, DoubleType)))
+    val synth = spark.createDataFrame(
+      java.util.Arrays.asList(flat ++ ties ++ holes: _*), schema)
+    Seq(IndicatorConfig(), odd).foreach(cfg =>
+      assertFrameKernelMatchesWindows(synth, Seq("s"), Seq("i"), "adj", cfg))
   }
 
   test("bucketed tables join without any exchange") {

@@ -106,6 +106,27 @@ class PlanSpec extends SparkSpec {
     assert(shuffles(plan("pipeline_full")) == 1)
   }
 
+  test("frame and recursive kernels share one Window node") {
+    // graft_frame_w runs in the same operator as graft_ind_w, so the day
+    // pipeline plans at most 8 Window nodes; pipeline_full adds one,
+    // EventBars.minuteBars' slot numbering.
+    import org.apache.spark.sql.Row
+    val d = java.time.LocalDate.of(2024, 3, 5)
+    val o = graft.etl.MarketCalendar.marketOpenCloseNanos(d)._1
+    val rows = (0 until 5).map(i =>
+      Row("AAPL", 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, o + i * 60000000000L))
+    val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      graft.model.Schemas.rawBars)
+    val day = graft.ind.IndicatorPipeline.run(raw, d)
+      .queryExecution.executedPlan.toString
+    Seq(day -> 8, plan("pipeline_full") -> 9).foreach { case (p, most) =>
+      val windows = p.linesIterator.filter(_.contains("Window [")).toSeq
+      assert(windows.length <= most, p)
+      assert(windows.count(w => w.contains("graft_frame_w") &&
+        w.contains("graft_ind_w")) == 1, p)
+    }
+  }
+
   test("as-of join is one shuffle (union before the exchange)") {
     assert(shuffles(plan("asof_join")) == 1)
   }
