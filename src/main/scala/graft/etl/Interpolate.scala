@@ -1,8 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** F3 — positional linear interpolation of nulls ("fill_na",
   * reference stockdata/indicators.py:151-163).
@@ -10,9 +8,12 @@ import org.apache.spark.sql.expressions.Window
   * pandas `interpolate(limit_direction="both")` semantics: nulls between
   * two observed values get linear interpolation by ROW POSITION; leading
   * nulls clamp to the first observed value, trailing nulls to the last
-  * (np.interp edge behavior). Expressed with `last/first ignoreNulls`
-  * running windows — two Window nodes over the partitioning F1 already
-  * established, no new shuffle.
+  * (np.interp edge behavior). Only null is missing; a NaN cell is a
+  * value. `fillCols` are DOUBLE.
+  *
+  * Runs as the fill stage of one [[SeriesScan]]: one pass per (keys)
+  * group in ts order that holds the group's rows once, so the cost is
+  * linear in the group's length. Column order is unchanged.
   */
 object Interpolate {
 
@@ -20,37 +21,8 @@ object Interpolate {
       df: DataFrame,
       keyCols: Seq[String],
       tsCol: String,
-      fillCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(tsCol)
-    val back = w.rowsBetween(Window.unboundedPreceding, 0)
-    val fwd = w.rowsBetween(0, Window.unboundedFollowing)
-    // All auxiliary window columns in ONE select so CollapseWindow merges
-    // them into exactly two Window nodes (one per frame direction) over
-    // one sort — a per-column withColumn fold interleaves Projects and
-    // yields 4×|fillCols| window passes instead.
-    val withIdx = df.withColumn("_idx", row_number().over(w))
-    val aux = fillCols.flatMap { c =>
-      Seq(
-        last(col(c), ignoreNulls = true).over(back).as(s"_pv_$c"),
-        last(when(col(c).isNotNull, col("_idx")), ignoreNulls = true)
-          .over(back).as(s"_pi_$c"),
-        first(col(c), ignoreNulls = true).over(fwd).as(s"_nv_$c"),
-        first(when(col(c).isNotNull, col("_idx")), ignoreNulls = true)
-          .over(fwd).as(s"_ni_$c"))
-    }
-    val staged = withIdx.select(col("*") +: aux: _*)
-    val out = df.columns.map {
-      case c if fillCols.contains(c) =>
-        coalesce(
-          col(c),
-          col(s"_pv_$c") + (col(s"_nv_$c") - col(s"_pv_$c"))
-            * ((col("_idx") - col(s"_pi_$c")).cast("double")
-              / (col(s"_ni_$c") - col(s"_pi_$c")).cast("double")),
-          col(s"_pv_$c"), col(s"_nv_$c")).as(c)
-      case c => col(c)
-    }
-    staged.select(out.toIndexedSeq: _*)
-  }
+      fillCols: Seq[String]): DataFrame =
+    SeriesScan(df, keyCols, tsCol, None, None, fillCols)
 
   /** DuckDB CTE chain mirroring [[apply]]; exposes `ip_final`. */
   def sqlStages(

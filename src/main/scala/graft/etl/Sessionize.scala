@@ -1,8 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** F1 — gaps-and-islands sessionization ("break_dataframe",
   * reference stockdata/indicators.py:178-194 + helper :41-66).
@@ -14,10 +12,10 @@ import org.apache.spark.sql.expressions.Window
   * reference's `enumerate` over emitted islands, indicators.py:188) and
   * names them `"{ticker}-{island}"` (indicators.py:190).
   *
-  * Scale: one hash exchange on `ticker` feeds every window; the
-  * post-filter renumbering reuses the same partitioning (no second
-  * shuffle). At 100 TB, partition keys are (ticker[, trading day]) so no
-  * single window group is unbounded.
+  * Runs as the split stage of one [[SeriesScan]]: one hash exchange on
+  * the series keys and one (series, ts) sort, then a single pass that
+  * holds one island at a time. At 100 TB, partition keys are
+  * (ticker[, trading day]) so no single series is unbounded.
   */
 object Sessionize {
 
@@ -32,33 +30,15 @@ object Sessionize {
     apply(df, Seq(tickerCol), tickerCol, tsCol, allowedGaps)
 
   /** Composite-key variant: series identity = `partCols` (e.g.
-    * (ticker, ds) for multi-day runs); `nameCol` feeds the sub-ticker
-    * label exactly like the per-day reference runs do. */
+    * (ticker, ds) for multi-day runs); `nameCol`, one of them, feeds the
+    * sub-ticker label exactly like the per-day reference runs do. */
   def apply(
       df: DataFrame,
       partCols: Seq[String],
       nameCol: String,
       tsCol: String,
-      allowedGaps: Seq[Long]): DataFrame = {
-    val parts = partCols.map(col)
-    val w = Window.partitionBy(parts: _*).orderBy(tsCol)
-    val cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    val staged = df
-      .withColumn("_gap", col(tsCol) - lag(col(tsCol), 1).over(w))
-      .withColumn("_brk",
-        when(col("_gap").isNull, lit(0L))
-          .when(col("_gap").isin(allowedGaps: _*), lit(0L))
-          .otherwise(lit(1L)))
-      .withColumn("_isl_raw", sum("_brk").over(cum))
-      .withColumn("_isl_n",
-        count(lit(1)).over(Window.partitionBy(parts :+ col("_isl_raw"): _*)))
-      .filter(col("_isl_n") >= 2)
-      .withColumn("island",
-        (dense_rank().over(Window.partitionBy(parts: _*).orderBy("_isl_raw")) - 1)
-          .cast("long"))
-      .withColumn("sub_ticker", concat(col(nameCol), lit("-"), col("island")))
-    staged.drop("_gap", "_brk", "_isl_raw", "_isl_n")
-  }
+      allowedGaps: Seq[Long]): DataFrame =
+    SeriesScan(df, partCols, tsCol, Some((allowedGaps, nameCol)), None, Nil)
 
   /** DuckDB CTE chain mirroring [[apply]]; exposes `sz_final` =
     * input columns + island + sub_ticker. */

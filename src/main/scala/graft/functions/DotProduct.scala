@@ -235,7 +235,10 @@ object GraftFunctions {
     ("graft_holt_w", classOf[HoltWindow],
       arity("graft_holt_w", 1)(cs => HoltWindow(cs(0)))))
 
+  /** Registers the catalog and installs the [[graft.etl.SeriesScan]]
+    * planner strategy; both idempotent. */
   def register(spark: SparkSession): Unit = {
+    graft.etl.SeriesScan.install(spark)
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     builders.foreach { case (name, clazz, b) =>

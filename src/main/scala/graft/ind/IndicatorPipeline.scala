@@ -6,31 +6,34 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.etl.{Densify, Interpolate, MarketCalendar, Sessionize}
+import graft.etl.{MarketCalendar, SeriesScan}
 import graft.model.{IndicatorConfig, Schemas}
 
 /** The reference's flagship E2 pipeline as ONE declarative DataFrame
   * transform (SURVEY.md §3 "Spark shape of the whole of E2"):
   *
-  *   raw bars → ticker/market-hours filters → sessionize (islands) →
-  *   60s grid densify → linear interpolate → frame + recursive
-  *   indicators → 18-column project → warm-up dropna.
+  *   raw bars → ticker/market-hours filters → [[SeriesScan]] (sessionize
+  *   into islands → 60s grid densify → linear interpolate, one sorted
+  *   pass) → frame + recursive indicators → 18-column project → warm-up
+  *   dropna.
   *
   * Replaces the reference's per-ticker Python loop
-  * (data_indicators.py:48-62) with Window partitioning over the series
-  * keys: `ticker` for one day ([[run]]), `(ticker, ds)` for a range of
-  * days ([[runRange]]). One hash exchange on the series keys feeds
-  * sessionization; (series, island) feeds everything after, so the
-  * whole pipeline is ONE exchange.
+  * (data_indicators.py:48-62) with partitioning on the series keys:
+  * `ticker` for one day ([[run]]), `(ticker, ds)` for a range of days
+  * ([[runRange]]). One hash exchange on the series keys and one
+  * (series, ts) sort feed the scan; its output is already ordered by
+  * (series, island, ts), so the indicator kernels' one Window node
+  * needs no sort of its own. The whole pipeline is one exchange, one
+  * sort and one Window node.
   *
   * [[run]] and [[runRange]] differ only in their market-hours front
   * end; both call the same key-generic body, and the registry's
   * pipeline_* queries call its public [[tail]] directly.
   *
   * Scale notes (100 TB): the per-day filter folds to literals and
-  * pushes into the parquet scan; every window shares the
-  * (series[, island]) exchange; a ticker-day is ≤ ~420 rows
-  * (SURVEY.md §7.4). Nothing collects to the driver.
+  * pushes into the parquet scan; the scan's cost is linear in a
+  * series' length and it holds one island at a time (a ticker-day is
+  * ≤ ~420 rows, SURVEY.md §7.4). Nothing collects to the driver.
   */
 object IndicatorPipeline {
 
@@ -67,8 +70,8 @@ object IndicatorPipeline {
     body(withDs, ts >= bounds("_1") && ts < bounds("_2"), Seq("ticker", "ds"), cfg)
   }
 
-  /** Filters → sessionize → densify → interpolate → [[tail]], every
-    * stage keyed by the `series` columns (which always include
+  /** Filters → [[SeriesScan]] (sessionize, densify, interpolate) →
+    * [[tail]], keyed by the `series` columns (which always include
     * `ticker`, the sub-ticker label source). */
   private def body(raw: DataFrame, marketHours: Column, series: Seq[String],
       cfg: IndicatorConfig): DataFrame = {
@@ -79,11 +82,9 @@ object IndicatorPipeline {
       .filter(marketHours)
       .withColumn(cfg.volumeColumn, col(cfg.volumeColumn).cast("double")) // P6
 
-    val sessioned = Sessionize(filtered, series, "ticker", ts,
-      cfg.allowedGapsSec.map(_ * 1000000000L))                             // F1
-    val densified = Densify(sessioned,
-      series ++ Seq("island", "sub_ticker"), ts, cfg.gridStepSec * 1000000000L) // F2
-    val filled = Interpolate(densified, series :+ "island", ts,
+    val filled = SeriesScan(filtered, series, ts,
+      Some((cfg.allowedGapsSec.map(_ * 1000000000L), "ticker")),          // F1
+      Some(cfg.gridStepSec * 1000000000L),                                 // F2
       Seq(cfg.volumeColumn, "open", cfg.closeUnadjColumn, cfg.highColumn,
         cfg.lowColumn, cfg.closeColumn))                                   // F3
     tail(filled, series, cfg)
@@ -92,10 +93,10 @@ object IndicatorPipeline {
   /** Indicator tail over sessionized, gap-free bars (columns: `series`
     * keys, `island`, `sub_ticker` and the `cfg` source columns): frame
     * indicators plus the fused recursive kernel over ONE
-    * (series, island) window — the exchange the caller's Interpolate
-    * already made — then the 18 [[Schemas.indicatorColumns]] (plus any
-    * non-`ticker` series key) and, when `cfg.skipNa`, the warm-up
-    * dropna (P4).
+    * (series, island) window — the exchange and order the caller's
+    * [[SeriesScan]] already made — then the 18
+    * [[Schemas.indicatorColumns]] (plus any non-`ticker` series key)
+    * and, when `cfg.skipNa`, the warm-up dropna (P4).
     *
     * The kernel's RSI and CMO share one Wilder state, so split periods
     * are rejected here, at call time.

@@ -1,5 +1,12 @@
 package graft.io
 
+import java.io.InputStreamReader
+import java.nio.charset.StandardCharsets
+
+import scala.jdk.CollectionConverters._
+
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings, UnescapedQuoteHandling}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,18 +23,33 @@ import graft.model.Schemas
   */
 object BarsIO {
 
-  /** S1: S&P member-list CSV scan + the two appended ETF literals
-    * (get_spy_tickers, data_download_yahoo.py:20-24). */
-  def tickerList(spark: SparkSession, csvPath: String): DataFrame = {
-    val syms = spark.read.option("header", "true").csv(csvPath)
-      .select(col("Symbol").as("ticker"))
-    val extra = spark.createDataFrame(
-      java.util.Arrays.asList(
-        org.apache.spark.sql.Row("SPY"), org.apache.spark.sql.Row("VOO")),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("ticker",
-          org.apache.spark.sql.types.StringType))))
-    syms.unionByName(extra)
+  /** S1: the S&P member-list CSV's `Symbol` column plus the two appended
+    * ETF literals (get_spy_tickers, data_download_yahoo.py:20-24).
+    *
+    * The list is ~500 names that the downloader needs on the driver, so
+    * it is parsed there, with the parser and the defaults of Spark's CSV
+    * source (separator `,`, quote `"`, escape `\`, a header row, an empty
+    * cell read as null): no Spark job, and no CSV source to start. */
+  def tickerList(spark: SparkSession, csvPath: String): Seq[String] = {
+    val path = new Path(csvPath)
+    val settings = new CsvParserSettings()
+    settings.getFormat.setDelimiter(',')
+    settings.getFormat.setQuote('"')
+    settings.getFormat.setQuoteEscape('\\')
+    settings.setCommentProcessingEnabled(false)
+    settings.setIgnoreLeadingWhitespaces(false)
+    settings.setIgnoreTrailingWhitespaces(false)
+    settings.setMaxCharsPerColumn(-1)
+    settings.setUnescapedQuoteHandling(UnescapedQuoteHandling.STOP_AT_DELIMITER)
+    val in = new InputStreamReader(
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path),
+      StandardCharsets.UTF_8)
+    val rows = try new CsvParser(settings).parseAll(in).asScala.toSeq finally in.close()
+    require(rows.nonEmpty, s"$csvPath: no header row")
+    val sym = rows.head.indexWhere(h => h != null && h.equalsIgnoreCase("Symbol"))
+    require(sym >= 0, s"$csvPath: no Symbol column in ${rows.head.mkString(",")}")
+    rows.tail.map(r => r.lift(sym).filter(v => v != null && v.nonEmpty).orNull) ++
+      Seq("SPY", "VOO")
   }
 
   /** S3: read raw bars with the fixed 8-column schema enforced by

@@ -100,7 +100,6 @@ object Downloader {
       chunkSize: Int = 10)(
       fetch: Seq[String] => Option[DataFrame]): Long = {
     val tickers = BarsIO.tickerList(spark, tickerCsv)
-      .collect().map(_.getString(0)).toSeq // ticker NAMES only (~500)
     val chunks = breakChunks(tickers, chunkSize)
     val parts = chunks.flatMap(tc => fetch(tc).map(flattenWide(_, tc)))
     if (parts.isEmpty) return 0L

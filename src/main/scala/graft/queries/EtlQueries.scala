@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.etl.{Densify, Interpolate, Sessionize}
+import graft.etl.{Densify, Interpolate, SeriesScan, Sessionize}
 import graft.ind.{FrameIndicators, IndicatorPipeline, RecursiveIndicators}
 import graft.model.IndicatorConfig
 
@@ -29,6 +29,12 @@ object EtlQueries {
 
   private def interpolated(s: SparkSession, dir: String): DataFrame =
     Interpolate(densified(s, dir), Seq("ticker", "island"), "ws", FillCols)
+
+  /** F1–F3 as the pipelines run them: one [[SeriesScan]] with all three
+    * stages, keyed by `keys` (the chain of [[interpolated]], in one pass). */
+  private def scanned(bars: DataFrame, keys: Seq[String]): DataFrame =
+    SeriesScan(bars.drop("event_id"), keys, "ws", Some((Gaps, "ticker")),
+      Some(Step), FillCols)
 
   private val sqlSession =
     s"""${EventBars.sqlMinuteBars},
@@ -57,7 +63,8 @@ object EtlQueries {
   /** Dropping warm-up rows before r6 keeps the same rows as after:
     * r6 never turns a finite value into null or NaN. */
   private val pipelineFull: (SparkSession, String) => DataFrame = (s, dir) =>
-    rounded(IndicatorPipeline.tail(interpolated(s, dir), Seq("ticker"), TailCfg))
+    rounded(IndicatorPipeline.tail(scanned(EventBars.minuteBars(s, dir), Seq("ticker")),
+      Seq("ticker"), TailCfg))
 
   /** Synthetic "trading day" length (grid slots) for pipeline_range —
     * short enough that the gate SFs genuinely span several days
@@ -81,9 +88,9 @@ object EtlQueries {
     // frame indicators per sub_ticker → dropna (reference P4).
     "pipeline_frame" -> ((s, dir) => {
       // partition on (ticker, island) ≡ sub_ticker so the frame windows
-      // reuse the exchange Interpolate already created (no new shuffle)
-      val fi = FrameIndicators.addAll(interpolated(s, dir),
-        Seq("ticker", "island"), Seq("ws"))
+      // reuse the exchange and order of the scan (no new shuffle or sort)
+      val fi = FrameIndicators.addAll(
+        scanned(EventBars.minuteBars(s, dir), Seq("ticker")), Seq("ticker", "island"), Seq("ws"))
       val out = fi.select(col("sub_ticker").as("ticker"),
         col("ws").as("window_start"), Rounding.r6(col("close")).as("close_price"),
         r6("rocp_1"), r6("rocp_2"), r6("rocp_3"), r6("rocp_4"), r6("rocp_5"),
@@ -96,18 +103,18 @@ object EtlQueries {
     "pipeline_window" -> pipelineFull,
 
     // Faithful E2 (SURVEY.md §3): the reference's full 18-column
-    // indicator table — IndicatorPipeline's own tail over the
-    // interpolated bars, so the flagship is ONE hash exchange
-    // end-to-end. Its recursive columns come from the same graft_ind_w
-    // kernel ind_recursive runs; PipelineSpec pins that kernel against
-    // RecursiveIndicators.scan.
+    // indicator table — IndicatorPipeline's own tail over the bars one
+    // SeriesScan sessionized, densified and interpolated, so the
+    // flagship is ONE hash exchange end-to-end. Its recursive columns
+    // come from the same graft_ind_w kernel ind_recursive runs;
+    // PipelineSpec pins that kernel against RecursiveIndicators.scan.
     "pipeline_full" -> pipelineFull,
 
     // IndicatorPipeline.runRange's 100 TB multi-day shape, oracle-gated:
     // N "trading days" in ONE plan — series identity (ticker, ds), every
-    // stage (sessionize → densify → interpolate → indicator tail) keyed
-    // by (ticker, ds[, island]) so the whole range rides one hash
-    // exchange (PlanSpec pin). Days here slice the synthetic grid every
+    // stage (the sessionize → densify → interpolate scan, then the
+    // indicator tail) keyed by (ticker, ds[, island]) so the whole range
+    // rides one hash exchange (PlanSpec pin). Days here slice the synthetic grid every
     // RangeDaySlots slots (pure integer epoch math; the calendar-bound
     // variant is test-pinned by PipelineSpec's runRange ≡ per-day-union).
     // Warm-up rows stay (P4's dropna is pipeline_full's pin; days are
@@ -118,11 +125,8 @@ object EtlQueries {
         .withColumn("ds", expr(s"(ws - ${EventBars.GridBaseMicros}L) DIV " +
           s"${Step * RangeDaySlots}L"))
       val keys = Seq("ticker", "ds")
-      val sz = Sessionize(mb, keys, "ticker", "ws", Gaps)
-      val dz = Densify(sz.drop("event_id"),
-        keys ++ Seq("island", "sub_ticker"), "ws", Step)
-      val ip = Interpolate(dz, keys :+ "island", "ws", FillCols)
-      rounded(IndicatorPipeline.tail(ip, keys, TailCfg.copy(skipNa = false)))
+      rounded(IndicatorPipeline.tail(scanned(mb, keys), keys,
+        TailCfg.copy(skipNa = false)))
     }))
 
   val oracles: Map[String, String] = Map(

@@ -162,8 +162,7 @@ class IoFormatsSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/members.csv"),
       "Symbol,Name\nAAPL,Apple\nMSFT,Microsoft\n")
-    val out = graft.io.BarsIO.tickerList(spark, s"$dir/members.csv")
-      .collect().map(_.getString(0)).sorted.toSeq
+    val out = graft.io.BarsIO.tickerList(spark, s"$dir/members.csv").sorted
     assert(out == Seq("AAPL", "MSFT", "SPY", "VOO"))
   }
 }

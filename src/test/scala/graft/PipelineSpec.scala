@@ -147,6 +147,18 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("allowed gaps off the grid step are rejected when the plan is built") {
+    // on a 60 s grid a 90 s gap cannot be filled, and a 150 s one would
+    // leave a 90 s step after its one grid row
+    Seq(Seq(60L, 90L), Seq(60L, 150L)).foreach { gaps =>
+      intercept[IllegalArgumentException] {
+        IndicatorPipeline.run(rawDay(), date, IndicatorConfig(allowedGapsSec = gaps))
+      }
+    }
+    assert(IndicatorPipeline.run(rawDay(), date,
+      IndicatorConfig(allowedGapsSec = Seq(60L, 120L, 240L))).count() > 0)
+  }
+
   /** Runs `graft_ind_w(close, high, low, close[, p, q])` over
     * `(series, i, close, high, low)` rows, one running window per
     * series, and checks every output of every row against

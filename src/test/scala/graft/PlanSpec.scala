@@ -127,6 +127,42 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("the bars path: one exchange, one sort, the kernels' one Window node") {
+    // SeriesScan sessionizes, densifies and interpolates in one pass over
+    // the (series, ts) sort and hands the kernels' window its (series,
+    // island, ts) order: no Window node of the ETL front end, no Generate
+    // of the grid, no look-ahead frame.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.{GenerateExec, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    val d = java.time.LocalDate.of(2024, 3, 5)
+    val o = graft.etl.MarketCalendar.marketOpenCloseNanos(d)._1
+    val rows = (0 until 5).map(i =>
+      Row("AAPL", 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, o + i * 120000000000L))
+    val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      graft.model.Schemas.rawBars)
+    val cfg = graft.model.IndicatorConfig(skipNa = false)
+    Seq(graft.ind.IndicatorPipeline.run(raw, d, cfg),
+      graft.ind.IndicatorPipeline.runRange(raw, Seq(d, d.plusDays(1)), cfg)).foreach { df =>
+      assert(df.collect().length == 9) // 5 bars and 4 grid rows, executed
+      val p = df.queryExecution.executedPlan
+      object H extends AdaptiveSparkPlanHelper
+      def n(pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Any]) =
+        H.collectWithSubqueries(p)(pf).size
+      assert(n { case e: ShuffleExchangeLike => e } == 1, p)
+      assert(n { case s: SortExec => s } == 1, p)
+      assert(n { case w: WindowExecBase => w } == 1, p)
+      assert(n { case g: GenerateExec => g } == 0, p)
+      assert(n { case s: graft.etl.SeriesScanExec => s } == 1, p)
+      assert(!p.toString.toLowerCase.contains("unboundedfollowing"), p)
+    }
+    // pipeline_full adds EventBars.minuteBars' slot window
+    val full = plan("pipeline_full")
+    assert(full.linesIterator.count(_.contains("Window [")) <= 2, full)
+  }
+
   test("as-of join is one shuffle (union before the exchange)") {
     assert(shuffles(plan("asof_join")) == 1)
   }
